@@ -18,8 +18,8 @@ sharing layer on top:
    once per shape, never once per rule.
 2. Compiled fan-out: ONE projection over ONE scan builds, per event,
    an array of per-SHAPE match structs — each guarded by that shape's
-   compiled LITERAL predicate (whole-stage codegen) — then
-   ``array_compact`` + ``explode``. No join, no per-row field maps;
+   compiled LITERAL predicate (whole-stage codegen) — then ``inline``
+   and a not-null filter. No join, no per-row field maps;
    each surviving row carries (shape_id, key, _value, window
    geometry). foreachBatch rebuilds the plan every batch anyway, so
    literal predicates cost nothing in flexibility; the rules-as-data
@@ -29,13 +29,15 @@ sharing layer on top:
    at once — window starts are computed *data-driven* from the shape
    row's own window/frequency columns (epoch-millis integer math,
    identical to rules/compiler.py and rules/sql_gen.py), so shapes
-   with different window sizes still share the single shuffle. All
-   five aggregates (SUM/AVG/MIN/MAX/COUNT) are computed in that one
-   pass (map-side partial aggregation applies).
-4. The per-rule expansion is a BROADCAST join against the tiny
-   (shape_id → rule metadata) table: each rule selects its aggregate
-   from the five and applies its own threshold. Aggregation cost is
-   O(#shapes); only the final projection is O(#rules).
+   with different window sizes still share the single shuffle. Every
+   aggregate some rule uses (of SUM/AVG/MIN/MAX/COUNT) is computed in
+   that one pass (map-side partial aggregation applies).
+4. The per-rule expansion is a constant lookup: one folded literal
+   holds each shape's member-rule metadata, and every shape row
+   ``inline``s its own list, so each rule selects its aggregate from
+   the five and applies its own threshold — no join, no extra job.
+   Aggregation cost is O(#shapes); only the final projection is
+   O(#rules).
 5. W1 (per-event slide) shapes share the scan and get one RANGE-frame
    window pass per *distinct* window size when sizes are few (frame
    bounds must be plan constants — cheapest JVM path); at
@@ -51,6 +53,7 @@ and shuffle volume is O(#shapes), not O(#rules).
 
 from __future__ import annotations
 
+import json
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
@@ -69,10 +72,20 @@ from activedatawarehouseprototype_spark.rules.compiler import (  # noqa: E402
     _NUMERIC_PREFIXES,
 )
 
-RULE_META_SCHEMA = (
-    "shape_id bigint, query_id bigint, agg_fn string, is_count boolean, "
-    "limit_op string, limit_val double"
+RULE_META_TYPE = (
+    "array<array<struct<query_id:bigint, agg_fn:string, "
+    "limit_op:string, limit_val:double>>>"
 )
+# the shape-level aggregate column each rule's aggregator reads
+_AGG_COLS = {
+    "COUNT": "_cnt", "SUM": "_sum", "AVG": "_avg", "MIN": "_min", "MAX": "_max"
+}
+
+
+def _agg_fn(rule: Rule) -> str | None:
+    if rule.is_count:
+        return "COUNT"
+    return getattr(rule.aggregator_function_type, "value", None)
 
 
 def validate_rule_fields(rule: Rule, dtypes: dict[str, str]) -> None:
@@ -142,7 +155,7 @@ def _shape_struct(shape_id: int, rep: Rule, events: DataFrame) -> Column:
     """Literal per-shape match struct: NULL when the shape's (compiled,
     literal — whole-stage-codegen) filter rejects the row, else the
     shape's id/key/value/window geometry. One array of these per event,
-    compacted and exploded, IS the fan-out — no join, no maps."""
+    inlined with its NULLs dropped, IS the fan-out — no join, no maps."""
     if rep.is_count or rep.aggregate_field_name is None:
         # COUNT shapes and W0 passthrough rules (which validly carry
         # no aggregate field) have no value column to read
@@ -253,24 +266,22 @@ def shape_fanout(
     (shape_id, key, _value, mode, window_ms, freq_ms).
 
     Two physical strategies, same semantics (equivalence-tested):
-    - ≤ LITERAL_MAX_SHAPES: one projection building the compacted array
-      of per-shape literal match structs (whole-stage codegen, no join;
+    - ≤ LITERAL_MAX_SHAPES: one projection building the array of
+      per-shape literal match structs (whole-stage codegen, no join;
       plan size grows with #shapes).
     - above it: shapes become a broadcast DATA table evaluated by
       ``operators.fanout.fan_out`` (plan size constant; per-row map
       lookups instead of literals).
     """
     if len(shapes) <= LITERAL_MAX_SHAPES:
+        # inline + a not-null filter, not array_compact + explode: the
+        # compact is a lambda that whole-stage codegen falls back on
         return events.select(
             F.col(ts_col),
-            F.explode(
-                F.array_compact(
-                    F.array(
-                        *[_shape_struct(sid, rep, events) for sid, rep, _ in shapes]
-                    )
-                )
-            ).alias("_r"),
-        ).select(ts_col, "_r.*")
+            F.inline(
+                F.array(*[_shape_struct(sid, rep, events) for sid, rep, _ in shapes])
+            ),
+        ).filter(F.col("shape_id").isNotNull())
 
     from activedatawarehouseprototype_spark.operators.fanout import fan_out
 
@@ -294,25 +305,31 @@ def shape_fanout(
     )
 
 
-def _rule_metas(spark, shapes: list[tuple[int, Rule, list[Rule]]]) -> DataFrame:
-    """Tiny broadcastable (shape_id → per-rule aggregate/threshold)
-    expansion table — the only place rule cardinality appears."""
-    rows = []
-    for sid, _, members in shapes:
-        for r in members:
-            rows.append(
-                (
-                    sid,
-                    r.query_id,
-                    r.aggregator_function_type.value
-                    if r.aggregator_function_type
-                    else None,
-                    bool(r.is_count),
-                    r.limit_operator_type.value if r.limit_operator_type else None,
-                    float(r.limit) if r.limit is not None else None,
-                )
-            )
-    return local_rows_df(spark, rows, RULE_META_SCHEMA)
+def _rule_metas(shapes: list[tuple[int, Rule, list[Rule]]]) -> Column:
+    """(shape_id → member-rule aggregate/threshold) expansion as ONE
+    JSON literal that Catalyst folds to a constant array — the only
+    place rule cardinality appears. Indexed by shape_id + 1."""
+    metas = [
+        [
+            {
+                "query_id": r.query_id,
+                "agg_fn": _agg_fn(r),
+                "limit_op": getattr(r.limit_operator_type, "value", None),
+                "limit_val": None if r.limit is None else float(r.limit),
+            }
+            for r in members
+        ]
+        for _, _, members in shapes
+    ]
+    return F.from_json(F.lit(json.dumps(metas)), RULE_META_TYPE)
+
+
+def _members(rows: DataFrame, metas: Column) -> DataFrame:
+    """One row per (shape row, member rule) — a generator over the
+    row's own slice of the folded metadata literal, no join."""
+    return rows.select(
+        "*", F.inline(F.element_at(metas, F.col("shape_id").cast("int") + 1))
+    )
 
 
 def _fired(agg: Column) -> Column:
@@ -329,25 +346,21 @@ def _fired(agg: Column) -> Column:
     )
 
 
-def _select_agg(sum_c, avg_c, min_c, max_c, cnt_c) -> Column:
+def _select_agg(used: set[str]) -> Column:
+    """Each rule's own aggregate out of the shape's five. Only the
+    aggregates some rule ``used`` are read, so column pruning drops the
+    others from the aggregation itself."""
     fn = F.col("agg_fn")
-    return (
-        F.when(F.col("is_count"), cnt_c)
-        .when(fn == "SUM", sum_c)
-        .when(fn == "AVG", avg_c)
-        .when(fn == "MIN", min_c)
-        .when(fn == "MAX", max_c)
+    return F.coalesce(
+        *[F.when(fn == n, F.col(c)) for n, c in _AGG_COLS.items() if n in used],
+        F.lit(None),
     ).cast("double")
 
 
-def _expand_rules(aggregated: DataFrame, metas: DataFrame) -> DataFrame:
-    """shape-level 5-aggregate rows × rule metadata → per-rule EVAL
-    rows (broadcast hash join on shape_id; build side is control data)."""
-    joined = aggregated.join(F.broadcast(metas), "shape_id")
-    agg = _select_agg(
-        F.col("_sum"), F.col("_avg"), F.col("_min"), F.col("_max"), F.col("_cnt")
-    )
-    return joined.select(
+def _expand_rules(aggregated: DataFrame, metas: Column, used: set[str]) -> DataFrame:
+    """shape-level aggregate rows × rule metadata → per-rule EVAL rows."""
+    agg = _select_agg(used)
+    return _members(aggregated, metas).select(
         F.col("query_id"),
         F.col("key"),
         F.col("window_start"),
@@ -385,9 +398,9 @@ def evaluate_rules_grouped(
     # null event time ⇒ no window ⇒ excluded in every mode (same
     # contract as rules/compiler.evaluate_rule)
     events = events.filter(F.col(ts_col).isNotNull())
-    spark = events.sparkSession
     shapes = group_shapes(active)
-    metas = _rule_metas(spark, shapes)
+    metas = _rule_metas(shapes)
+    used = {_agg_fn(r) for r in active}
     modes = {window_mode(rep) for _, rep, _ in shapes}
     keyed = shape_fanout(events, shapes, ts_col)
 
@@ -396,9 +409,9 @@ def evaluate_rules_grouped(
     branches: list[DataFrame] = []
 
     if "W0" in modes:
-        # Per-event passthrough: agg=0, fired=false — the metas join
+        # Per-event passthrough: agg=0, fired=false — the metas lookup
         # only supplies each member rule's query_id.
-        w0 = keyed.filter(F.col("mode") == "W0").join(F.broadcast(metas), "shape_id")
+        w0 = _members(keyed.filter(F.col("mode") == "W0"), metas)
         branches.append(
             w0.select(
                 F.col("query_id"),
@@ -447,7 +460,7 @@ def evaluate_rules_grouped(
                     F.max("_value").over(wspec).alias("_max"),
                     F.count(F.lit(1)).over(wspec).cast("double").alias("_cnt"),
                 )
-                branches.append(_expand_rules(aggd, metas))
+                branches.append(_expand_rules(aggd, metas, used))
         else:
             # Many distinct sizes: ONE shuffle on (shape, key) + ONE
             # Arrow pass computes every shape's trailing aggregates with
@@ -472,7 +485,7 @@ def evaluate_rules_grouped(
                 F.timestamp_millis(F.col("_tsl")).alias("window_end"),
                 "_sum", "_avg", "_min", "_max", "_cnt",
             )
-            branches.append(_expand_rules(aggd, metas))
+            branches.append(_expand_rules(aggd, metas, used))
 
     if "W2" in modes or "W3" in modes:
         w = F.col("window_ms")
@@ -492,21 +505,14 @@ def evaluate_rules_grouped(
             .withColumn("ws", F.explode(ws_arr))
         )
         # window_ms is functionally dependent on shape_id — a free
-        # rider in the grouping key, needed for window_end.
-        #
-        # KNOWN EDGE (documented, not a bug): grouping here is by the
-        # RENDERED key string — reference parity (DynamicKeyFunction
-        # keys the stream by the composite-key STRING, so NULL and the
-        # literal string 'null' in one column merge into one group).
-        # The compiled per-rule path (rules/compiler.py) groups by the
-        # actual typed columns and would keep them separate. The two
-        # paths agree on every input whose key columns don't contain a
-        # value that renders identically to another (in practice: a
-        # string column holding the literal text 'null' alongside real
-        # NULLs). The pipeline's path switch (grouped_min_rules) is
-        # therefore value-transparent except on that pathological
-        # collision, where the grouped path is the reference-faithful
-        # one.
+        # rider in the grouping key, needed for window_end. Grouping
+        # is by the RENDERED key string — reference parity
+        # (DynamicKeyFunction keys the stream by the composite-key
+        # STRING, so NULL and the literal string 'null' in one column
+        # merge into one group). The typed-column grouping of
+        # rules/compiler.py keeps them apart; the pipeline evaluates
+        # every rule here, so its output never depends on which path
+        # a rule took.
         group_cols = ["shape_id", "key", "ws", "window_ms"]
         if salt_buckets and salt_buckets > 1:
             salted = w23.withColumn(
@@ -541,6 +547,6 @@ def evaluate_rules_grouped(
             F.timestamp_millis(F.col("ws") + F.col("window_ms")).alias("window_end"),
             "_sum", "_avg", "_min", "_max", "_cnt",
         )
-        branches.append(_expand_rules(aggd, metas))
+        branches.append(_expand_rules(aggd, metas, used))
 
     return reduce(lambda a, b: a.unionByName(b), branches)

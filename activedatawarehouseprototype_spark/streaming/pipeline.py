@@ -13,10 +13,11 @@ threshold) → alerts + spawned rules. Here each ``foreachBatch``:
    pruned to ``prev_batch_max_event_ts - widest_active_window`` (the
    one-batch lag guarantees a window closing THIS batch still has all
    its events in the readable buffer).
-3. Evaluate every ACTIVE rule over the buffer in ONE fanned-out plan
-   (streaming/group_eval.py): one buffer scan + one broadcast join +
-   one shuffle for all W2/W3 rules — O(#modes) scans, not O(#rules),
-   matching the reference's single pass (DynamicKeyFunction.java:51-105).
+3. Evaluate every ACTIVE rule — wire rules and spawned children alike
+   — over the buffer in ONE fanned-out plan (streaming/group_eval.py):
+   one buffer scan + one shuffle for all W2/W3 rules — O(#modes)
+   scans, not O(#rules), matching the reference's single pass
+   (DynamicKeyFunction.java:51-105).
 4. Emit evaluation rows (K2 demo stream) and fired alerts (K1):
    - W2/W3 windows emit ONCE, when the event-time high watermark
      (max event ts seen) passes their end — finalized windows, same
@@ -42,6 +43,9 @@ buffer table becomes Delta/Iceberg with retention, same code shape.
 
 from __future__ import annotations
 
+import dataclasses
+import json
+import logging
 import os
 import shutil
 import tempfile
@@ -51,13 +55,16 @@ from dataclasses import dataclass, field as dc_field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from functools import reduce
-
-from activedatawarehouseprototype_spark.rules.compiler import (
-    evaluate_rule,
+from activedatawarehouseprototype_spark.rules.compiler import (  # noqa: F401
+    evaluate_rule,  # not called here; perfbench/streams.py patches this name
     window_mode,
 )
-from activedatawarehouseprototype_spark.rules.model import Rule
+from activedatawarehouseprototype_spark.rules.model import (
+    LimitOperatorType,
+    Rule,
+    RuleState,
+    WindowFilterRule,
+)
 from activedatawarehouseprototype_spark.rules.snowflake import SnowflakeIdWorker
 from activedatawarehouseprototype_spark.session import local_rows_df
 from activedatawarehouseprototype_spark.streaming.eca import (
@@ -70,6 +77,8 @@ from activedatawarehouseprototype_spark.streaming.group_eval import (
     validate_rule_fields,
 )
 from activedatawarehouseprototype_spark.streaming.registry import RuleRegistry
+
+_log = logging.getLogger(__name__)
 
 
 def _now_ms() -> int:
@@ -129,13 +138,6 @@ class ActivePipeline:
     # pruning instead of filtering rows out of every live footer — at
     # 100 TB the read-side retention filter must not scan expired data.
     buffer_bucket_ms: int = 3_600_000
-    # evaluation-path crossover: below this many rules, per-rule
-    # compiled plans (cheapest per-row: literal predicates, max
-    # pushdown — N scans is fine for constant-small N); at or above
-    # it, the single-scan fan-out plan (scan count stays O(#modes) as
-    # the rule set grows). Both paths are value-identical
-    # (tests/test_group_eval.py).
-    grouped_min_rules: int = 8
     # alert storm control: when set, at most one alert per (query_id,
     # key) is EMITTED per cooldown window — re-firings inside the
     # window are counted (metrics["alerts_suppressed"]) but not
@@ -1137,18 +1139,15 @@ class ActivePipeline:
             return
 
         # (3) evaluate every active rule over the buffer in ONE
-        # fanned-out plan (group_eval): one buffer scan + one broadcast
-        # join + one shared shuffle for all W2/W3 rules — per-batch
-        # scan/job count stays O(#modes) as the rule set grows. Rules
-        # naming fields the schema lost quarantine instead of failing
-        # the batch (validated driver-side; the grouped plan would
-        # silently aggregate nulls otherwise).
-        # validate against the schema rules will actually SEE: the
-        # buffer still carries the internal ingest-batch column here
-        # (dropped per-cohort right before evaluation), so a wire rule
-        # naming _batch (or _bucket) must fail validation and be
-        # quarantined now — passing it through would throw inside the
-        # grouped plan and fail the whole micro-batch (round-11 ADVICE)
+        # fanned-out plan (group_eval): one buffer scan + one shared
+        # shuffle for all W2/W3 rules — per-batch scan/job count stays
+        # O(#modes) as the rule set grows. Rules naming fields the
+        # schema lost quarantine instead of failing the batch
+        # (validated driver-side; the grouped plan would silently
+        # aggregate nulls otherwise). Validation excludes the internal
+        # ingest-batch and bucket columns: only the pipeline itself
+        # may filter on _batch (born-batch scoping below), so a wire
+        # rule naming it quarantines here (round-11 ADVICE).
         dtypes = {
             c: t
             for c, t in buffer.dtypes
@@ -1159,9 +1158,8 @@ class ActivePipeline:
             try:
                 validate_rule_fields(rule, dtypes)
                 by_id[rule.query_id] = rule
-            except Exception:
-                self.metrics["rule_errors"] = self.metrics.get("rule_errors", 0) + 1
-                self._quarantine(rule)
+            except ValueError as e:
+                self._quarantine(rule, str(e))
         if not by_id:
             self._watching = {}  # nothing evaluated this batch
             self._persist_watermarks()
@@ -1205,53 +1203,28 @@ class ActivePipeline:
         # REPLAYED trigger batch must not be evaluated by children that
         # did not exist on its first run (the batch=N idempotent sinks
         # would overwrite the original rows with different ones). The
-        # gate is the buffer's _batch partition column (> born — file
-        # pruning, never a row scan of excluded batches); rules sharing
-        # a birth batch evaluate as one cohort, so the common all-wire
-        # case stays the single fanned-out plan.
-        cohorts: dict[int | None, list[Rule]] = {}
-        for rule in by_id.values():
-            cohorts.setdefault(rule.born_batch_id, []).append(rule)
-        parts = []
-        for born in sorted(cohorts, key=lambda b: -1 if b is None else b):
-            cohort = cohorts[born]
-            src = (
-                buffer
-                if born is None
-                else buffer.filter(F.col(self.BATCH_COL) > born)
-            ).drop(self.BATCH_COL)
-            if len(cohort) >= self.grouped_min_rules:
-                parts.append(
-                    evaluate_rules_grouped(
-                        src,
-                        cohort,
-                        ts_col=self.ts_col,
-                        salt_buckets=self.salt_buckets,
-                    )
-                )
-                continue
-            # small cohort: compiled per-rule plans are the faster
-            # per-row path; compile failures beyond the schema checks
-            # above (e.g. unparseable numeric filter value) quarantine.
-            for rule in cohort:
-                try:
-                    parts.append(evaluate_rule(src, rule, ts_col=self.ts_col))
-                except Exception:
-                    self.metrics["rule_errors"] = (
-                        self.metrics.get("rule_errors", 0) + 1
-                    )
-                    del by_id[rule.query_id]
-                    self._quarantine(rule)
-        if not parts:
-            # same bookkeeping as the other nothing-evaluated exits:
-            # without the persist, a PRUNE batch that ends here loses
-            # its _pruned_to advance on crash and a later wide rule
-            # floors against a stale horizon
-            self._watching = {}
-            self._persist_watermarks()
-            self.metrics["last_batch_seconds"] = time.perf_counter() - t_start
-            return
-        evals = reduce(lambda a, b: a.unionByName(b), parts)
+        # scope is one more filter conjunct, ``_batch > born``, on the
+        # child's copy: a row predicate inside the single scan, and a
+        # distinct shape per birth batch (group_eval.shape_key).
+        rules = [
+            r
+            if r.born_batch_id is None
+            else dataclasses.replace(
+                r,
+                window_filter_rules=[
+                    *r.window_filter_rules,
+                    WindowFilterRule(
+                        self.BATCH_COL,
+                        LimitOperatorType.GREATER,
+                        str(r.born_batch_id),
+                    ),
+                ],
+            )
+            for r in by_id.values()
+        ]
+        evals = evaluate_rules_grouped(
+            buffer, rules, ts_col=self.ts_col, salt_buckets=self.salt_buckets
+        )
 
         # (4) emission gates:
         # - W2/W3: only windows CLOSED by the event-time high watermark
@@ -1259,44 +1232,34 @@ class ActivePipeline:
         #   semantics; open windows wait for later batches.
         # - all modes: per-rule emitted-window_end watermark suppresses
         #   re-emission of buffered events across batches.
+        # Conjuncts on window_end alone push below the per-rule
+        # expansion and the aggregation, so windows no rule can emit
+        # are never aggregated: the closing gate when every rule
+        # closes, and the smallest per-rule watermark when every rule
+        # has one (implied by the exact per-rule gate).
+        end = F.unix_millis("window_end")
         closing_ids = [
             qid for qid, r in by_id.items() if window_mode(r) in ("W2", "W3")
         ]
         if closing_ids and self._max_event_ts is not None:
-            close_wm = self._max_event_ts - self.lateness_ms
-            evals = evals.filter(
-                (~F.col("query_id").isin(closing_ids))
-                | (F.unix_millis("window_end") <= close_wm)
-            )
-        wm_pairs = [
-            (qid, self._emitted_wm[qid])
+            closed = end <= self._max_event_ts - self.lateness_ms
+            if len(closing_ids) < len(by_id):
+                closed = ~F.col("query_id").isin(closing_ids) | closed
+            evals = evals.filter(closed)
+        wm = {
+            str(qid): self._emitted_wm[qid]
             for qid in by_id
             if qid in self._emitted_wm
-        ]
-        if 0 < len(wm_pairs) <= 32:
-            # small rule sets: one literal predicate, no extra join
-            gate = F.lit(True)
-            for qid, wm in wm_pairs:
-                gate = gate & (
-                    (F.col("query_id") != qid)
-                    | (F.unix_millis("window_end") > wm)
-                )
-            evals = evals.filter(gate)
-        elif wm_pairs:
-            # large rule sets: an O(N)-term predicate bloats every
-            # batch's plan — gate via a broadcast join against the tiny
-            # watermark table instead (plan size constant).
-            wm_df = local_rows_df(
-                self.spark, wm_pairs, "query_id bigint, _wm bigint"
-            )
-            evals = (
-                evals.join(F.broadcast(wm_df), "query_id", "left")
-                .filter(
-                    F.col("_wm").isNull()
-                    | (F.unix_millis("window_end") > F.col("_wm"))
-                )
-                .drop("_wm")
-            )
+        }
+        if len(wm) == len(by_id):
+            evals = evals.filter(end > min(wm.values()))
+        if wm:
+            # one folded map literal (JSON keys are strings), so the
+            # plan stays one constant however many rules are gated
+            rule_wm = F.from_json(F.lit(json.dumps(wm)), "map<string,bigint>")[
+                F.col("query_id").cast("string")
+            ]
+            evals = evals.filter(rule_wm.isNull() | (end > rule_wm))
 
         evals.persist()
         try:
@@ -1397,14 +1360,17 @@ class ActivePipeline:
                 self.metrics["rules_spawned"] += 1
         self.metrics["last_batch_seconds"] = time.perf_counter() - t_start
 
-    def _quarantine(self, rule: Rule) -> None:
-        """A rule whose plan no longer compiles is PAUSEd in place (it
-        stays visible for inspection) rather than killing the batch.
-        Persisted immediately: without it a restart would reload the
-        rule as ACTIVE and re-fail it every cycle, and persisted state
-        would disagree with what the pipeline actually ran."""
-        from activedatawarehouseprototype_spark.rules.model import RuleState
-
+    def _quarantine(self, rule: Rule, reason: str) -> None:
+        """A rule that no longer validates against the event schema is
+        PAUSEd in place (it stays visible for inspection) rather than
+        killing the batch; its reason lands in
+        ``metrics["quarantined"][query_id]`` and one warning. Persisted
+        immediately: without it a restart would reload the rule as
+        ACTIVE and re-fail it every cycle, and persisted state would
+        disagree with what the pipeline actually ran."""
+        self.metrics["rule_errors"] = self.metrics.get("rule_errors", 0) + 1
+        self.metrics.setdefault("quarantined", {})[rule.query_id] = reason
+        _log.warning("rule %s quarantined: %s", rule.query_id, reason)
         rule.query_state = RuleState.PAUSE
         self.registry.rules[rule.query_id] = rule
         self.registry._persist()
@@ -1575,8 +1541,7 @@ class ActivePipeline:
             # evaluation semantics don't depend on prune timing
             buffer = _retained(self.spark.read.parquet(self.buffer_path))
         # _batch stays: evaluation scopes SPAWNED rules to events
-        # ingested after their birth batch (dropped per-cohort there,
-        # so non-ECA plans are unchanged)
+        # ingested after their birth batch (a filter conjunct on it)
         return buffer.drop(self.BUCKET_COL)
 
     def _clear_buffer(self) -> None:

@@ -16,6 +16,7 @@ Budgets (steady state, optional stages off):
 from __future__ import annotations
 
 import json
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,8 +25,31 @@ from activedatawarehouseprototype_spark.streaming.pipeline import ActivePipeline
 from activedatawarehouseprototype_spark.streaming.registry import RuleRegistry
 
 
-def _jobs(spark) -> int:
-    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+def _jobs(spark, pipe, df, batch_id) -> int:
+    """Spark jobs one micro-batch runs, counted through the public job
+    group API (broadcast jobs inherit the caller's group).
+
+    The status tracker is filled asynchronously by the listener bus, so
+    a sentinel job in a second group runs after the batch: listener
+    events arrive in order, so once the sentinel is visible every job of
+    the batch has been recorded too."""
+    sc = spark.sparkContext
+    group = f"job-budget-{batch_id}-{id(pipe)}"
+    sentinel = f"{group}-sentinel"
+    try:
+        sc.setJobGroup(group, "job budget")
+        pipe.process_batch(df, batch_id)
+        sc.setJobGroup(sentinel, "job budget sentinel")
+        sc.parallelize([0], 1).count()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(sentinel):
+        assert time.monotonic() < deadline, "sentinel job never recorded"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
 
 
 def _batch(spark, n=50, speed=10.0):
@@ -40,10 +64,9 @@ def test_idle_pipeline_two_jobs_per_batch(spark, tmp_path):
         spark=spark, registry=RuleRegistry(), work_dir=str(tmp_path / "wk")
     )
     pipe.process_batch(_batch(spark), 0)  # warm-up (committer init etc.)
-    j0 = _jobs(spark)
-    pipe.process_batch(_batch(spark), 1)
-    assert _jobs(spark) - j0 <= 2, (
-        f"idle micro-batch ran {_jobs(spark) - j0} jobs (budget: 2 — "
+    jobs = _jobs(spark, pipe, _batch(spark), 1)
+    assert jobs <= 2, (
+        f"idle micro-batch ran {jobs} jobs (budget: 2 — "
         "buffer write + schema read); a job crept onto the idle path"
     )
 
@@ -76,10 +99,9 @@ def test_single_rule_no_match_four_jobs_per_batch(spark, tmp_path):
     )
     pipe.process_batch(_batch(spark), 0)  # warm-up
     pipe.process_batch(_batch(spark), 1)  # steady state reached
-    j0 = _jobs(spark)
-    pipe.process_batch(_batch(spark), 2)
-    assert _jobs(spark) - j0 <= 4, (
-        f"single-rule no-emission micro-batch ran {_jobs(spark) - j0} "
+    jobs = _jobs(spark, pipe, _batch(spark), 2)
+    assert jobs <= 4, (
+        f"single-rule no-emission micro-batch ran {jobs} "
         "jobs (budget: 4 — buffer write, schema read, eval "
         "materialization, watermark agg); see tools/profile_batch.py"
     )

@@ -604,13 +604,15 @@ def test_bad_rule_quarantined_not_fatal(spark, pipeline):
     pipeline.process_batch(car_df(spark, [(9, 1, 130.0)]), 0)
     assert pipeline.metrics.get("rule_errors") == 1
     assert pipeline.registry.rules[66].query_state.value == "PAUSE"
+    # the paused rule explains itself
+    assert "no_such_column" in pipeline.metrics["quarantined"][66]
     assert pipeline.alerts().filter("query_id = 1").count() > 0
 
 
 def test_rule_naming_internal_batch_column_quarantined(spark, pipeline):
-    """The buffer carries the internal ingest-batch column when rules
-    are validated (it's dropped per-cohort just before evaluation), so
-    a wire rule naming ``_batch`` must FAIL validation and quarantine —
+    """The buffer carries the internal ingest-batch column into
+    evaluation (born-batch scoping filters on it), so a wire rule
+    naming ``_batch`` must FAIL validation and quarantine —
     not pass validation and then blow up the whole micro-batch inside
     the grouped plan (round-11 ADVICE regression)."""
     reg = pipeline.registry
@@ -2044,7 +2046,7 @@ def test_pipeline_hot_key_salted_grouped_soak(spark, tmp_path, monkeypatch):
 
     reg = RuleRegistry()
     rules = []
-    for i in range(10):  # >= grouped_min_rules → grouped path
+    for i in range(10):
         rd = {
             "queryId": 500 + i, "queryState": "ACTIVE", "lastTime": -1,
             "windowMilliseconds": 60_000, "frequencyMilliseconds": None,
@@ -2417,8 +2419,8 @@ def test_pipeline_all_features_soak_with_restart(spark, tmp_path):
     """Kitchen-sink soak: EVERY optional pipeline stage enabled at once
     — ingest quality gate, summary MV + mergeable histogram, alert
     cooldown, CDC enrichment MV, rolling z-score anomaly stage, and the
-    salted grouped evaluator (grouped_min_rules=1 forces the grouped
-    path, so the soak doubles as its e2e salted-correctness check) —
+    salted grouped evaluator (every rule takes it, so the soak doubles
+    as its e2e salted-correctness check) —
     across 8 batches with a mid-soak RESTART and an at-least-once
     replay of the final batch. Each stage's standalone invariants must
     hold when all of them compose."""
@@ -2452,7 +2454,7 @@ def test_pipeline_all_features_soak_with_restart(spark, tmp_path):
             anomaly_key_cols=["carId"], anomaly_value_col="speed",
             anomaly_bucket_ms=10_000, anomaly_lookback=7,
             anomaly_min_periods=3, anomaly_threshold=3.0,
-            salt_buckets=4, grouped_min_rules=1,
+            salt_buckets=4,
         )
 
     pipe = mk()
@@ -2775,14 +2777,12 @@ def test_rule_born_batch_id_roundtrip():
 
 
 def test_born_batch_scoping_grouped_path(spark, pipeline):
-    """The born-batch event gate must hold on the GROUPED evaluation
-    path too (>= grouped_min_rules same-born rules evaluate as one
-    fanned-out cohort): ten children born in batch 0 must aggregate
+    """The born-batch event gate must hold when many same-born rules
+    share the one fanned-out plan: ten children born in batch 0 must aggregate
     ONLY batch-1 events — a 20s window that would otherwise also see
     the batch-0 event."""
     reg = pipeline.registry
     n = 10
-    assert n >= pipeline.grouped_min_rules
     for i in range(n):
         r = Rule.from_dict(
             {
@@ -2815,3 +2815,96 @@ def test_born_batch_scoping_grouped_path(spark, pipeline):
     # 10.0, not 55.0: the batch-0 event is invisible to born-0 rules
     assert {r["agg_value"] for r in evals} == {10.0}
     assert {r["query_id"] for r in evals} == {100 + i for i in range(n)}
+
+
+def _sum_rule(qid, key="carId", filters=(), **extra):
+    d = {
+        "queryId": qid, "queryState": "ACTIVE", "lastTime": -1,
+        "windowMilliseconds": 60_000, "frequencyMilliseconds": None,
+        "groupingKeyNames": [key], "windowFilterRules": list(filters),
+        "aggregatorFunctionType": "SUM", "limitOperatorType": ">",
+        "limit": 0, "aggregateFieldName": "speed",
+    }
+    return Rule.from_dict(dict(d, **extra))
+
+
+def test_rule_output_independent_of_rule_set(spark, tmp_path):
+    """A rule's evaluations must not depend on how many other rules
+    run beside it. The key column holds both NULL and the literal
+    string 'null', which render to the same composite key: the rule
+    alone and the rule among nine others must agree, and both merge
+    the two into one group (reference parity — DynamicKeyFunction
+    keys by the rendered string)."""
+    events = spark.createDataFrame(
+        [
+            (None, BASE + dt.timedelta(seconds=1), 10.0),
+            ("null", BASE + dt.timedelta(seconds=2), 20.0),
+            ("A", BASE + dt.timedelta(seconds=3), 40.0),
+            ("A", BASE + dt.timedelta(seconds=100), 0.0),  # closes [0, 60s)
+        ],
+        "plate string, ts timestamp, speed double",
+    )
+
+    def run(rules, name):
+        reg = RuleRegistry()
+        for r in rules:
+            reg.apply(r)
+        pipe = ActivePipeline(
+            spark=spark, registry=reg, work_dir=str(tmp_path / name)
+        )
+        pipe.process_batch(events, 0)
+        return sorted(
+            (r["key"], r["window_start"], r["agg_value"], r["fired"])
+            for r in pipe.evaluations().filter("query_id = 1").collect()
+        )
+
+    alone = run([_sum_rule(1, key="plate")], "alone")
+    others = [
+        _sum_rule(
+            200 + i,
+            key="plate",
+            filters=[{"field": "speed", "operator": ">", "value": str(i)}],
+        )
+        for i in range(9)
+    ]
+    among = run([_sum_rule(1, key="plate"), *others], "among")
+    assert alone == among
+    assert [(k, v) for k, _, v, _ in alone] == [
+        ("{plate=A}", 40.0),
+        ("{plate=null}", 30.0),
+    ]
+
+
+def test_wire_and_children_one_grouped_call(spark, pipeline, monkeypatch):
+    """Wire rules and children born in two different batches evaluate
+    in ONE grouped plan per batch, each child still scoped to events
+    ingested after its birth batch."""
+    import activedatawarehouseprototype_spark.streaming.pipeline as P
+
+    reg = pipeline.registry
+    reg.apply(_sum_rule(1))
+    for qid, born in ((2, 0), (3, 1)):
+        child = _sum_rule(qid)
+        child.born_batch_id = born
+        reg.apply(child)
+    pipeline.process_batch(car_df(spark, [(1, 1, 10.0)]), 0)
+    pipeline.process_batch(car_df(spark, [(1, 2, 20.0)]), 1)
+
+    calls = []
+    orig = P.evaluate_rules_grouped
+
+    def spy(buffer, rules, **kw):
+        calls.append(sorted(r.query_id for r in rules))
+        return orig(buffer, rules, **kw)
+
+    monkeypatch.setattr(P, "evaluate_rules_grouped", spy)
+    pipeline.process_batch(car_df(spark, [(1, 3, 40.0), (1, 100, 0.0)]), 2)
+    assert calls == [[1, 2, 3]]
+    got = {
+        r["query_id"]: r["agg_value"]
+        for r in pipeline.evaluations()
+        .filter(F.col("window_start") == F.lit(BASE))
+        .collect()
+    }
+    # wire: every batch; born 0: batches 1-2; born 1: batch 2 only
+    assert got == {1: 70.0, 2: 60.0, 3: 40.0}
