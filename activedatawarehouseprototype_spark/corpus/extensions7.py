@@ -297,28 +297,31 @@ def corpus_pipeline_e2e_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge count fills the cache instead of the anti-join re-running
     # the gate+groupBy a second time inside the final job.
     exact = gated.groupBy("text").agg(F.min("doc_id").alias("doc_id")).persist()
-    cand = dedup.lsh_candidates(
-        exact,
-        "doc_id",
-        "text",
-        n=_NGRAM,
-        k=12,
-        bands=3,
-        max_doc_freq=_MAX_DOC_FREQ,
-    )
-    dupes = (
-        dedup.connected_components(cand)
-        .filter(F.col("id") != F.col("comp"))
-        .select(F.col("id").alias("doc_id"))
-    )
-    # `kept` is consumed TWICE by the final aggregate (the per-doc
-    # chunk stats and the split/chars branch). One eager checkpoint
-    # (a single anti-join job over the cached `exact` + the already-
-    # checkpointed labels) lets the final job read it from executor
-    # cache on both branches — and releases `exact` immediately
-    # instead of leaking a cached frame per bench invocation.
-    kept = exact.join(dupes, "doc_id", "left_anti").localCheckpoint()
-    exact.unpersist()
+    try:
+        cand = dedup.lsh_candidates(
+            exact,
+            "doc_id",
+            "text",
+            n=_NGRAM,
+            k=12,
+            bands=3,
+            max_doc_freq=_MAX_DOC_FREQ,
+        )
+        dupes = (
+            dedup.connected_components(cand)
+            .filter(F.col("id") != F.col("comp"))
+            .select(F.col("id").alias("doc_id"))
+        )
+        # `kept` is consumed TWICE by the final aggregate (the per-doc
+        # chunk stats and the split/chars branch). One eager checkpoint
+        # (a single anti-join job over the cached `exact` + the already-
+        # checkpointed labels) lets the final job read it from executor
+        # cache on both branches — and releases `exact` immediately
+        # (on an error too) instead of leaking a cached frame per bench
+        # invocation.
+        kept = exact.join(dupes, "doc_id", "left_anti").localCheckpoint()
+    finally:
+        exact.unpersist()
     chunks = packing.chunk_documents(
         kept, "doc_id", "text", chunk_tokens=32, overlap=8
     )

@@ -50,9 +50,12 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import os
 import shutil
+from collections import Counter
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -132,16 +135,30 @@ def _doc_stats(docs: DataFrame, text_col: str) -> dict:
     }
 
 
+_log = logging.getLogger(__name__)
+
+# meta reads that fell back from the Observation to an aggregate job,
+# by reason
+obs_fallbacks: Counter = Counter()
+
+
 def _obs_meta(obs, docs: DataFrame, text_col: str) -> dict:
     """Doc-level meta from the Observation that rode the postings
     write. Degenerate corpora (e.g. a statically all-NULL local
     relation) can be optimizer-collapsed to an empty plan before the
-    CollectMetrics node runs, leaving the observation rowless — fall
-    back to one explicit aggregate job, the pre-round-12 path."""
+    CollectMetrics node runs, leaving the observation rowless: reading
+    it then fails a JVM assertion converting the empty row. Only that
+    case falls back to one explicit aggregate job (the pre-round-12
+    path), counted in ``obs_fallbacks`` and logged; any other error
+    raises."""
     try:
         return dict(obs.get)
-    except Exception:
-        return _doc_stats(docs, text_col)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.lang.AssertionError":
+            raise
+    obs_fallbacks["rowless observation"] += 1
+    _log.warning("text index meta: rowless observation, recomputing with one aggregate job")
+    return _doc_stats(docs, text_col)
 
 
 def _write_meta(path: str, meta: dict) -> None:

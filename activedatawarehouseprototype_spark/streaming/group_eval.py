@@ -21,8 +21,8 @@ sharing layer on top:
    compiled LITERAL predicate (whole-stage codegen) — then ``inline``
    and a not-null filter. No join, no per-row field maps;
    each surviving row carries (shape_id, key, _value, window
-   geometry). foreachBatch rebuilds the plan every batch anyway, so
-   literal predicates cost nothing in flexibility; the rules-as-data
+   geometry). The literals change only with the rule set, so a steady
+   rule set reuses its compiled classes batch after batch; the rules-as-data
    variant (operators/fanout.py, BroadcastNestedLoopJoin) remains for
    fixed long-lived plans over mutable rule tables.
 3. ONE ``groupBy(shape_id, key, window_start)`` for ALL W2/W3 shapes
@@ -49,6 +49,17 @@ sharing layer on top:
 
 Per-batch Spark-job/scan count is therefore O(#modes), not O(#rules),
 and shuffle volume is O(#shapes), not O(#rules).
+
+Codegen invariant: a value that changes every batch rides a REFERENCE
+literal (a folded string/array/map/struct constant, which generated
+code reads from its references array) or row data, never a primitive
+literal — whole-stage codegen inlines primitive literals into the Java
+source, so one would make every steady batch recompile its classes.
+The per-rule emission bounds (``emit_bounds``) are fields of each
+rule's struct in the folded ``_rule_metas`` literal, and the shape-level
+bounds that prune windows below the aggregation are an array literal
+indexed by ``shape_id``. The rule filters stay compiled literals: they
+change only with the rule set.
 """
 
 from __future__ import annotations
@@ -74,8 +85,9 @@ from activedatawarehouseprototype_spark.rules.compiler import (  # noqa: E402
 
 RULE_META_TYPE = (
     "array<array<struct<query_id:bigint, agg_fn:string, "
-    "limit_op:string, limit_val:double>>>"
+    "limit_op:string, limit_val:double, after:bigint, until:bigint>>>"
 )
+SHAPE_BOUNDS_TYPE = "array<struct<after:bigint, until:bigint>>"
 # the shape-level aggregate column each rule's aggregator reads
 _AGG_COLS = {
     "COUNT": "_cnt", "SUM": "_sum", "AVG": "_avg", "MIN": "_min", "MAX": "_max"
@@ -305,10 +317,13 @@ def shape_fanout(
     )
 
 
-def _rule_metas(shapes: list[tuple[int, Rule, list[Rule]]]) -> Column:
-    """(shape_id → member-rule aggregate/threshold) expansion as ONE
-    JSON literal that Catalyst folds to a constant array — the only
-    place rule cardinality appears. Indexed by shape_id + 1."""
+def _rule_metas(
+    shapes: list[tuple[int, Rule, list[Rule]]], bounds: dict[int, tuple]
+) -> Column:
+    """(shape_id → member-rule aggregate/threshold/emission bounds)
+    expansion as ONE JSON literal that Catalyst folds to a constant
+    array — the only place rule cardinality appears. Indexed by
+    shape_id + 1."""
     metas = [
         [
             {
@@ -316,6 +331,8 @@ def _rule_metas(shapes: list[tuple[int, Rule, list[Rule]]]) -> Column:
                 "agg_fn": _agg_fn(r),
                 "limit_op": getattr(r.limit_operator_type, "value", None),
                 "limit_val": None if r.limit is None else float(r.limit),
+                "after": bounds[r.query_id][0],
+                "until": bounds[r.query_id][1],
             }
             for r in members
         ]
@@ -324,12 +341,37 @@ def _rule_metas(shapes: list[tuple[int, Rule, list[Rule]]]) -> Column:
     return F.from_json(F.lit(json.dumps(metas)), RULE_META_TYPE)
 
 
-def _members(rows: DataFrame, metas: Column) -> DataFrame:
-    """One row per (shape row, member rule) — a generator over the
-    row's own slice of the folded metadata literal, no join."""
+def _shape_bounds(
+    shapes: list[tuple[int, Rule, list[Rule]]], bounds: dict[int, tuple]
+) -> Column:
+    """Per-shape emission bounds, the loosest over the shape's members
+    (an unbounded member leaves its side unbounded): windows outside
+    them no member can emit, so they are dropped before aggregation.
+    One folded array literal indexed by shape_id + 1."""
+
+    def loosest(members: list[Rule], side: int, pick) -> int | None:
+        vals = [bounds[r.query_id][side] for r in members]
+        return None if None in vals else pick(vals)
+
+    out = [
+        {"after": loosest(members, 0, min), "until": loosest(members, 1, max)}
+        for _, _, members in shapes
+    ]
+    return F.from_json(F.lit(json.dumps(out)), SHAPE_BOUNDS_TYPE)
+
+
+def _in_bounds(end_ms: Column, after: Column, until: Column) -> Column:
+    """after < end_ms <= until, a NULL bound being unbounded."""
+    return (after.isNull() | (end_ms > after)) & (until.isNull() | (end_ms <= until))
+
+
+def _members(rows: DataFrame, metas: Column, end_ms: Column) -> DataFrame:
+    """One row per (shape row, member rule) whose emission bounds admit
+    the row's window end — a generator over the row's own slice of the
+    folded metadata literal, no join."""
     return rows.select(
         "*", F.inline(F.element_at(metas, F.col("shape_id").cast("int") + 1))
-    )
+    ).filter(_in_bounds(end_ms, F.col("after"), F.col("until")))
 
 
 def _fired(agg: Column) -> Column:
@@ -360,7 +402,8 @@ def _select_agg(used: set[str]) -> Column:
 def _expand_rules(aggregated: DataFrame, metas: Column, used: set[str]) -> DataFrame:
     """shape-level aggregate rows × rule metadata → per-rule EVAL rows."""
     agg = _select_agg(used)
-    return _members(aggregated, metas).select(
+    end_ms = F.unix_millis("window_end")
+    return _members(aggregated, metas, end_ms).select(
         F.col("query_id"),
         F.col("key"),
         F.col("window_start"),
@@ -375,11 +418,18 @@ def evaluate_rules_grouped(
     rules: list[Rule],
     ts_col: str = "ts",
     salt_buckets: int | None = None,
+    emit_bounds: dict[int, tuple[int | None, int | None]] | None = None,
 ) -> DataFrame:
     """Evaluate every ACTIVE rule over ``events`` with O(#modes) scans
     (ONE scan + ONE shuffle when all rules are W2/W3) and O(#shapes)
     aggregation work. Output schema and values match
     ``rules.compiler.evaluate_rules`` exactly.
+
+    ``emit_bounds`` maps a query_id to ``(after, until)`` in epoch ms:
+    only that rule's rows with ``after < window_end <= until`` are
+    returned (``None`` = unbounded on that side; absent rules are
+    unbounded). The bounds are data of the folded literals, so plans
+    that differ only in bounds share their compiled classes.
 
     Rules must be pre-validated with ``validate_rule_fields`` — unknown
     fields here would aggregate nulls instead of raising.
@@ -399,7 +449,10 @@ def evaluate_rules_grouped(
     # contract as rules/compiler.evaluate_rule)
     events = events.filter(F.col(ts_col).isNotNull())
     shapes = group_shapes(active)
-    metas = _rule_metas(shapes)
+    bounds = {
+        r.query_id: (emit_bounds or {}).get(r.query_id, (None, None)) for r in active
+    }
+    metas = _rule_metas(shapes, bounds)
     used = {_agg_fn(r) for r in active}
     modes = {window_mode(rep) for _, rep, _ in shapes}
     keyed = shape_fanout(events, shapes, ts_col)
@@ -411,7 +464,7 @@ def evaluate_rules_grouped(
     if "W0" in modes:
         # Per-event passthrough: agg=0, fired=false — the metas lookup
         # only supplies each member rule's query_id.
-        w0 = _members(keyed.filter(F.col("mode") == "W0"), metas)
+        w0 = _members(keyed.filter(F.col("mode") == "W0"), metas, tsl)
         branches.append(
             w0.select(
                 F.col("query_id"),
@@ -500,9 +553,15 @@ def evaluate_rules_grouped(
         ws_arr = F.when(F.col("mode") == "W2", F.array(tumb_start)).otherwise(
             F.sequence(slide_first, slide_last, f_)
         )
+        # windows no member rule may emit are dropped before the
+        # aggregation, so a batch with nothing to emit aggregates nothing
+        sb = F.element_at(
+            _shape_bounds(shapes, bounds), F.col("shape_id").cast("int") + 1
+        )
         w23 = (
             keyed.filter(F.col("mode").isin("W2", "W3"))
             .withColumn("ws", F.explode(ws_arr))
+            .filter(_in_bounds(F.col("ws") + w, sb["after"], sb["until"]))
         )
         # window_ms is functionally dependent on shape_id — a free
         # rider in the grouping key, needed for window_end. Grouping

@@ -357,7 +357,7 @@ class ActivePipeline:
                 for e in rawwatch
             }
             self._emitted_wm = {int(k): v for k, v in raw.items()}
-        self._has_buffer = self._buffer_data_exists()
+        self._has_buffer = bool(self._buffer_buckets())
 
     @property
     def _wm_path(self) -> str:
@@ -1107,17 +1107,6 @@ class ActivePipeline:
                 os.path.join(self.latency_path, f"batch={batch_id}")
             )
 
-        # (2) shared event buffer with widest-window retention
-        buffer = self._update_buffer(batch_df, batch_id)
-        vals = obs.get  # populated by the buffer/latency writes above
-        bmax = vals.get("_max_ts")
-        if bmax is not None:
-            self._max_event_ts = max(self._max_event_ts or 0, int(bmax))
-        self.metrics["events_ingested"] += vals.get("n_events", 0)
-        if has_latency:
-            self.metrics["latency_avg_ms"] = vals.get("avg_ms")
-            self.metrics["latency_max_ms"] = vals.get("max_ms")
-
         active = self.registry.active()
         self.metrics["active_rules"] = len(active)
         # replay-idempotence guard: a child spawned during batch N
@@ -1132,6 +1121,18 @@ class ActivePipeline:
             for r in active
             if r.born_batch_id is None or batch_id > r.born_batch_id
         ]
+
+        # (2) shared event buffer with widest-window retention, read
+        # back only when some rule evaluates it
+        buffer = self._update_buffer(batch_df, batch_id, read=bool(active))
+        vals = obs.get  # populated by the buffer/latency writes above
+        bmax = vals.get("_max_ts")
+        if bmax is not None:
+            self._max_event_ts = max(self._max_event_ts or 0, int(bmax))
+        self.metrics["events_ingested"] += vals.get("n_events", 0)
+        if has_latency:
+            self.metrics["latency_avg_ms"] = vals.get("avg_ms")
+            self.metrics["latency_max_ms"] = vals.get("max_ms")
         if not active:
             self._watching = {}  # nothing evaluated this batch
             self._persist_watermarks()
@@ -1222,118 +1223,95 @@ class ActivePipeline:
             )
             for r in by_id.values()
         ]
-        evals = evaluate_rules_grouped(
-            buffer, rules, ts_col=self.ts_col, salt_buckets=self.salt_buckets
-        )
 
-        # (4) emission gates:
+        # (4) emission bounds, applied inside the evaluation plan as
+        # data of its folded literals (group_eval's codegen invariant):
         # - W2/W3: only windows CLOSED by the event-time high watermark
-        #   (window_end <= max event ts) — finalized-window append
-        #   semantics; open windows wait for later batches.
-        # - all modes: per-rule emitted-window_end watermark suppresses
-        #   re-emission of buffered events across batches.
-        # Conjuncts on window_end alone push below the per-rule
-        # expansion and the aggregation, so windows no rule can emit
-        # are never aggregated: the closing gate when every rule
-        # closes, and the smallest per-rule watermark when every rule
-        # has one (implied by the exact per-rule gate).
-        end = F.unix_millis("window_end")
-        closing_ids = [
-            qid for qid, r in by_id.items() if window_mode(r) in ("W2", "W3")
-        ]
-        if closing_ids and self._max_event_ts is not None:
-            closed = end <= self._max_event_ts - self.lateness_ms
-            if len(closing_ids) < len(by_id):
-                closed = ~F.col("query_id").isin(closing_ids) | closed
-            evals = evals.filter(closed)
-        wm = {
-            str(qid): self._emitted_wm[qid]
-            for qid in by_id
-            if qid in self._emitted_wm
+        #   (window_end <= max event ts - lateness) — finalized-window
+        #   append semantics; open windows wait for later batches.
+        # - all modes: the per-rule emitted-window_end watermark (or
+        #   registration floor) suppresses re-emission of buffered
+        #   events across batches.
+        closed = (
+            None
+            if self._max_event_ts is None
+            else self._max_event_ts - self.lateness_ms
+        )
+        bounds = {
+            qid: (
+                self._emitted_wm.get(qid),
+                closed if window_mode(r) in ("W2", "W3") else None,
+            )
+            for qid, r in by_id.items()
         }
-        if len(wm) == len(by_id):
-            evals = evals.filter(end > min(wm.values()))
-        if wm:
-            # one folded map literal (JSON keys are strings), so the
-            # plan stays one constant however many rules are gated
-            rule_wm = F.from_json(F.lit(json.dumps(wm)), "map<string,bigint>")[
-                F.col("query_id").cast("string")
-            ]
-            evals = evals.filter(rule_wm.isNull() | (end > rule_wm))
+        evals = evaluate_rules_grouped(
+            buffer,
+            rules,
+            ts_col=self.ts_col,
+            salt_buckets=self.salt_buckets,
+            emit_bounds=bounds,
+        )
+        n_rows, n_fired = self._write_evaluations(evals, batch_id)
+        # every later read takes this batch's rows back from the small
+        # partition just written: the evaluation plan runs once, and
+        # nothing is cached
+        if n_rows:
+            evals = self.spark.read.schema(evals.schema).parquet(
+                os.path.join(self.evals_path, f"batch={batch_id}")
+            )
+        else:
+            evals = evals.limit(0)
+        # (4b) enrichment join MV: this batch's evaluations are the
+        # left delta — ONE delta join against the dim snapshot,
+        # batch-id-idempotent (foreachBatch replays are no-ops)
+        if self.enrich_on:
+            from activedatawarehouseprototype_spark.operators.warehouse import (
+                incremental_join_mv,
+            )
 
-        evals.persist()
-        try:
-            # per-batch overwrite dir (replay-idempotent): a crash
-            # BEFORE _persist_watermarks re-delivers the batch with
-            # unchanged gate state, recomputing the identical rows —
-            # the overwrite replaces them 1:1 instead of appending
-            # duplicates. A replay AFTER the watermark commit emits
-            # nothing (the gate is monotone), so an empty output skips
-            # the write entirely rather than erasing the original rows.
-            if not evals.isEmpty():
-                evals.write.mode("overwrite").parquet(
-                    os.path.join(self.evals_path, f"batch={batch_id}")
-                )
-            # (4b) enrichment join MV: this batch's evaluations are the
-            # left delta — ONE delta join against the dim snapshot,
-            # batch-id-idempotent (foreachBatch replays are no-ops)
-            if self.enrich_on:
-                from activedatawarehouseprototype_spark.operators.warehouse import (
-                    incremental_join_mv,
-                )
-
-                incremental_join_mv(
-                    self.spark,
-                    self._enrich_jmv_base,
-                    [self.enrich_on],
-                    left_batch=evals,
-                    batch_id=batch_id,
-                )
+            incremental_join_mv(
+                self.spark,
+                self._enrich_jmv_base,
+                [self.enrich_on],
+                left_batch=evals,
+                batch_id=batch_id,
+            )
+        wm_rows, spawn_rows = [], []
+        if n_fired:
             fired = evals.filter("fired")
             emitted = (
                 self._apply_alert_cooldown(fired)
                 if self.alert_cooldown_ms
                 else fired
             )
-            if not emitted.isEmpty():
-                # same skip-when-empty idempotence contract as evals
+            # written only when non-empty, so a replay that fires
+            # nothing cannot erase the original batch's alerts; a
+            # cooldown that suppressed every firing leaves none pending
+            if not self.alert_cooldown_ms or self._cooldown_pending is not None:
                 emitted.write.mode("overwrite").parquet(
                     os.path.join(self.alerts_path, "data", f"batch={batch_id}")
                 )
             if self.alert_cooldown_ms:
                 # durable clock commits only after the sink write above
                 self._commit_alert_cooldown()
-            # one agg job yields BOTH the per-rule emission watermark
-            # and the fired count (a separate fired.count() was one
-            # more 32-task job per batch for a number this agg already
-            # passes over)
-            wm_rows = (
-                evals.groupBy("query_id")
-                .agg(
-                    F.max(F.unix_millis("window_end")).alias("max_end"),
-                    F.sum(F.col("fired").cast("long")).alias("n_fired"),
-                )
-                .collect()
-            )
-            spawning_ids = [
-                qid for qid, r in by_id.items() if r.alert_rules
-            ]
             # Bounded control-plane collect: DISTINCT trigger pairs,
             # capped — the driver never materializes the data plane.
-            spawn_rows = (
-                fired.filter(F.col("query_id").isin(spawning_ids))
-                .select("query_id", "key")
-                .distinct()
-                .limit(self.spawn_collect_cap)
+            spawning_ids = [qid for qid, r in by_id.items() if r.alert_rules]
+            if spawning_ids:
+                spawn_rows = (
+                    fired.filter(F.col("query_id").isin(spawning_ids))
+                    .select("query_id", "key")
+                    .distinct()
+                    .limit(self.spawn_collect_cap)
+                    .collect()
+                )
+        if n_rows:
+            wm_rows = (
+                evals.groupBy("query_id")
+                .agg(F.max(F.unix_millis("window_end")).alias("max_end"))
                 .collect()
-                if spawning_ids
-                else []
             )
-            self.metrics["alerts_fired"] += sum(
-                int(r.n_fired or 0) for r in wm_rows
-            )
-        finally:
-            evals.unpersist()
+        self.metrics["alerts_fired"] += n_fired
         for r in wm_rows:
             if r.max_end is not None:
                 self._emitted_wm[r.query_id] = max(
@@ -1359,6 +1337,34 @@ class ActivePipeline:
                 self.registry.apply(child, now)
                 self.metrics["rules_spawned"] += 1
         self.metrics["last_batch_seconds"] = time.perf_counter() - t_start
+
+    def _write_evaluations(self, evals: DataFrame, batch_id: int) -> tuple[int, int]:
+        """Write this batch's evaluation rows to ``evaluations/batch=<id>``
+        and return (rows, fired rows), observed on the write itself — no
+        separate emptiness probe or count job.
+
+        Dynamic partition overwrite replaces only the partitions the
+        output holds. A replay BEFORE the watermark commit recomputes
+        the identical rows and replaces them 1:1; a replay AFTER it
+        emits nothing (the gates are monotone), so it writes no
+        partition and the original rows stay. The batch id rides a
+        string literal because an integer one would be inlined into the
+        generated code and recompile the write every batch; the
+        ``batch`` directory names still read back as integers. The path
+        is given as ``evaluations/`` so path-based write accounting
+        (perfbench/streams.py) files it as a sink write."""
+        from pyspark.sql import Observation
+
+        obs = Observation(f"evals_{batch_id}")
+        evals.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.col("fired").cast("long")).alias("n_fired"),
+        ).withColumn("batch", F.lit(str(batch_id))).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("batch").parquet(os.path.join(self.evals_path, ""))
+        got = obs.get
+        return int(got["n_rows"]), int(got["n_fired"] or 0)
 
     def _quarantine(self, rule: Rule, reason: str) -> None:
         """A rule that no longer validates against the event schema is
@@ -1406,15 +1412,18 @@ class ActivePipeline:
             F.unix_millis(self.ts_col) / F.lit(self.buffer_bucket_ms)
         ).cast("bigint")
 
-    def _buffer_data_exists(self) -> bool:
-        """True iff the buffer directory holds at least one partition of
-        actual data. A partitioned write of 0 rows creates the directory
-        with only _SUCCESS — no data files, so a parquet read of it
+    def _buffer_buckets(self) -> set[str]:
+        """Values of the ``_bucket=<v>`` directories under every
+        ``_batch=<id>`` partition: the event-time buckets holding
+        buffered data. A partitioned write of 0 rows creates the batch
+        directory with only _SUCCESS — no bucket directory, no data
+        files, so an empty set means a parquet read of the buffer
         cannot infer a schema."""
         try:
             entries = os.listdir(self.buffer_path)
         except FileNotFoundError:
-            return False
+            return set()
+        out: set[str] = set()
         for e in entries:
             if not e.startswith(self.BATCH_COL + "="):
                 continue
@@ -1422,12 +1431,16 @@ class ActivePipeline:
                 sub = os.listdir(os.path.join(self.buffer_path, e))
             except NotADirectoryError:
                 continue
-            if any(s.startswith(self.BUCKET_COL + "=") for s in sub):
-                return True
-        return False
+            prefix = self.BUCKET_COL + "="
+            out.update(d[len(prefix):] for d in sub if d.startswith(prefix))
+        return out
 
-    def _update_buffer(self, batch_df: DataFrame, batch_id: int) -> DataFrame:
-        """Shared event buffer, widest-ACTIVE-window retention.
+    def _update_buffer(
+        self, batch_df: DataFrame, batch_id: int, read: bool = True
+    ) -> DataFrame | None:
+        """Shared event buffer, widest-ACTIVE-window retention. Returns
+        the readable buffer; with ``read=False`` (no rule evaluates this
+        batch) it may return None instead and skip the read.
 
         Per-batch cost is O(new batch): the micro-batch OVERWRITES its
         own ``_batch=<id>`` directory of the buffer (idempotent under
@@ -1468,7 +1481,8 @@ class ActivePipeline:
         ).partitionBy(self.BUCKET_COL).parquet(
             os.path.join(self.buffer_path, f"{self.BATCH_COL}={batch_id}")
         )
-        self._has_buffer = self._buffer_data_exists()
+        buckets = self._buffer_buckets()
+        self._has_buffer = bool(buckets)
 
         # the event-time high watermark (_max_event_ts) is advanced by
         # the CALLER from the Observation the buffer write populates —
@@ -1503,19 +1517,34 @@ class ActivePipeline:
             commit_swap,
         )
 
+        prune = self._batch_count % self.PRUNE_EVERY == 0
+        if not (read or prune):
+            return None
         buffer = self.spark.read.parquet(self.buffer_path)
 
         def _retained(df: DataFrame) -> DataFrame:
             if horizon is None:
                 return df
-            # partition predicate first (file pruning), exact ts second
+            # The horizon moves every batch, so it rides a folded map
+            # literal keyed by live bucket, not a primitive literal that
+            # codegen would inline. Buckets behind it (and the null-ts
+            # default partition) read NULL: the partition-only conjunct
+            # prunes their files, the exact ts floor follows.
+            first = horizon // self.buffer_bucket_ms
+            live = [
+                {"k": int(b), "v": horizon}
+                for b in buckets
+                if b.lstrip("-").isdigit() and int(b) >= first
+            ]
+            floor = F.map_from_entries(
+                F.from_json(F.lit(json.dumps(live)), "array<struct<k:bigint,v:bigint>>")
+            )[F.col(self.BUCKET_COL).cast("bigint")]
             return df.filter(
-                (F.col(self.BUCKET_COL) >= horizon // self.buffer_bucket_ms)
-                & (F.unix_millis(self.ts_col) >= horizon)
+                floor.isNotNull() & (F.unix_millis(self.ts_col) >= floor)
             )
 
         buffer = _retained(buffer)
-        if self._batch_count % self.PRUNE_EVERY == 0 and not buffer.isEmpty():
+        if prune and not buffer.isEmpty():
             # (isEmpty guard: a partitioned write of 0 rows emits no
             # files, and the re-read below couldn't infer a schema)
             staging = self.buffer_path + ".staging"
@@ -1556,33 +1585,37 @@ class ActivePipeline:
 
     # -- sinks ------------------------------------------------------------------
 
+    _ALERT_SCHEMA = (
+        "query_id long, key string, window_start timestamp, "
+        "window_end timestamp, agg_value double, fired boolean"
+    )
+
+    def _read_sink(self, path: str, empty_schema: str) -> DataFrame:
+        """A per-batch sink without its ``batch`` partition column.
+        Only a sink holding no data file yet — missing, or a write of
+        0 rows that left just ``_SUCCESS`` — reads as an empty frame; a
+        corrupt or unreadable store raises."""
+        for _, dirs, files in os.walk(path):
+            # the names Spark's file listing skips: hidden, and
+            # underscore-prefixed unless a partition directory
+            dirs[:] = [
+                d for d in dirs
+                if not d.startswith(".") and ("=" in d or not d.startswith("_"))
+            ]
+            if any(not f.startswith(("_", ".")) for f in files):
+                # batch= partition dirs are replay bookkeeping, not data
+                return self.spark.read.parquet(path).drop("batch")
+        return local_rows_df(self.spark, [], empty_schema)
+
     def alerts(self) -> DataFrame:
-        try:
-            # batch= partition dirs are replay bookkeeping, not data
-            return self.spark.read.parquet(self.alerts_path + "/data").drop(
-                "batch"
-            )
-        except Exception:
-            return local_rows_df(
-                self.spark,
-                [], "query_id long, key string, window_start timestamp, "
-                "window_end timestamp, agg_value double, fired boolean"
-            )
+        return self._read_sink(os.path.join(self.alerts_path, "data"), self._ALERT_SCHEMA)
 
     def evaluations(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self.evals_path).drop("batch")
-        except Exception:
-            return self.alerts().limit(0)
+        return self._read_sink(self.evals_path, self._ALERT_SCHEMA)
 
     def latency(self) -> DataFrame:
         """K3 latency side-output stream (event_ts, latency_ms)."""
-        try:
-            return self.spark.read.parquet(self.latency_path).drop("batch")
-        except Exception:
-            return local_rows_df(
-                self.spark, [], "event_ts timestamp, latency_ms bigint"
-            )
+        return self._read_sink(self.latency_path, "event_ts timestamp, latency_ms bigint")
 
     # -- streaming attach ---------------------------------------------------------
 

@@ -14,9 +14,10 @@ CLEAR_STATE_ALL_STOP / EXPORT_RULES_CURRENT).
 
 from __future__ import annotations
 
-import json
+import logging
 import os
 import time
+from collections import Counter
 from dataclasses import dataclass, field
 
 from activedatawarehouseprototype_spark.rules.model import (
@@ -24,6 +25,9 @@ from activedatawarehouseprototype_spark.rules.model import (
     Rule,
     RuleState,
 )
+
+
+_log = logging.getLogger(__name__)
 
 
 def _now_ms() -> int:
@@ -38,6 +42,9 @@ class RuleRegistry:
     clear_state_requested: bool = False
     stop_requested: bool = False
     exported: list[Rule] = field(default_factory=list)
+    # rule JSON dropped on the way in (apply_json, load), by reason:
+    # the parse error's class name, or "no queryId"
+    dropped: Counter = field(default_factory=Counter)
 
     # -- C1 upsert/delete + C2 re-trigger refresh ------------------------
 
@@ -93,14 +100,26 @@ class RuleRegistry:
 
     def apply_json(self, s: str, now_ms: int | None = None) -> None:
         """Parse-and-apply; unparseable rules are dropped like the
-        reference's RuleDeserializer (rule/RuleDeserializer.java:23-40)."""
-        try:
-            rule = Rule.from_json(s)
-        except Exception:
+        reference's RuleDeserializer (rule/RuleDeserializer.java:23-40),
+        and counted in ``dropped``."""
+        rule = self._parse(s)
+        if rule is None:
             return
         if rule.query_id is None and rule.query_state is not RuleState.CONTROL:
+            self._drop("no queryId", s)
             return
         self.apply(rule, now_ms)
+
+    def _parse(self, s: str) -> Rule | None:
+        try:
+            return Rule.from_json(s)
+        except Exception as e:
+            self._drop(type(e).__name__, s)
+            return None
+
+    def _drop(self, reason: str, s: str) -> None:
+        self.dropped[reason] += 1
+        _log.warning("rule JSON dropped (%s): %.200s", reason, s.strip())
 
     # -- C3/F4 TTL expiry -------------------------------------------------
 
@@ -173,11 +192,11 @@ class RuleRegistry:
                     # must not abort startup and take down every
                     # healthy standing query; id-less lines are
                     # rejected the same way apply_json rejects them
-                    try:
-                        r = Rule.from_json(line)
-                    except Exception:
+                    r = reg._parse(line)
+                    if r is None:
                         continue
                     if r.query_id is None:
+                        reg._drop("no queryId", line)
                         continue
                     reg.rules[r.query_id] = r
         return reg

@@ -334,3 +334,49 @@ def test_fused_w1_all_null_window_yields_null_not_nan(spark):
     # and the JVM (<4 sizes) path agrees
     jvm = evaluate_rules_grouped(ev, rules[:2]).collect()
     assert all(r.agg_value is None and not r.fired for r in jvm)
+
+
+def test_steady_batches_reuse_compiled_classes(spark, tmp_path):
+    """Codegen inlines primitive literals into the generated Java, so a
+    value that changes every batch must ride a reference literal or
+    row data (group_eval module docstring). Batch 3 runs the same rule
+    set as batch 2 while every per-batch value moves: each rule's
+    emitted watermark, the W2/W3 closing bound and the buffer's
+    retention horizon. It must compile no new class."""
+    from activedatawarehouseprototype_spark.measure import codegen_compiles
+    from activedatawarehouseprototype_spark.streaming.pipeline import ActivePipeline
+    from activedatawarehouseprototype_spark.streaming.registry import RuleRegistry
+
+    def batch(i):
+        rows = [
+            (
+                k % 3 + 1,
+                "a" if k % 2 == 0 else "b",
+                BASE + dt.timedelta(seconds=120 * i + 3 * k),
+                float((k * 37 + i) % 100),
+            )
+            for k in range(40)
+        ]
+        return spark.createDataFrame(
+            rows, "carId int, kind string, ts timestamp, speed double"
+        )
+
+    reg = RuleRegistry()
+    for r in RULES:
+        reg.apply(Rule.from_dict(r.to_dict()))
+    pipe = ActivePipeline(
+        spark=spark,
+        registry=reg,
+        work_dir=str(tmp_path / "wk"),
+        buffer_bucket_ms=30_000,
+    )
+    for i in range(3):
+        pipe.process_batch(batch(i), i)
+    before = (dict(pipe._emitted_wm), pipe._max_event_ts, pipe._cov_start)
+    c0 = codegen_compiles(spark)
+    pipe.process_batch(batch(3), 3)
+    compiled = codegen_compiles(spark) - c0
+    after = (dict(pipe._emitted_wm), pipe._max_event_ts, pipe._cov_start)
+    assert all(a != b for a, b in zip(after, before)), (before, after)
+    assert pipe.metrics["alerts_fired"] > 0
+    assert compiled == 0, f"a steady batch compiled {compiled} new classes"

@@ -2908,3 +2908,119 @@ def test_wire_and_children_one_grouped_call(spark, pipeline, monkeypatch):
     }
     # wire: every batch; born 0: batches 1-2; born 1: batch 2 only
     assert got == {1: 70.0, 2: 60.0, 3: 40.0}
+
+
+def _w2_avg_rule(limit: float) -> str:
+    return json.dumps(
+        {
+            "queryId": 1,
+            "queryState": "ACTIVE",
+            "lastTime": -1,
+            "windowMilliseconds": 10_000,
+            "frequencyMilliseconds": None,
+            "groupingKeyNames": ["carId"],
+            "windowFilterRules": [],
+            "aggregatorFunctionType": "AVG",
+            "limitOperatorType": ">",
+            "limit": limit,
+            "aggregateFieldName": "speed",
+        }
+    )
+
+
+def test_empty_output_and_replay_keep_sink_rows(spark, pipeline):
+    """Evaluations are written once per batch by dynamic partition
+    overwrite into evaluations/batch=<id>. A batch whose output is
+    empty writes no partition and no file at all (the commit marker
+    stays in the write's staging directory, which the commit removes),
+    and both sinks still read (as empty frames). A verbatim replay of a
+    batch AFTER its watermark commit emits nothing, so its original
+    rows stay."""
+    import os
+
+    pipeline.registry.apply_json(_w2_avg_rule(15.0))
+    first = car_df(spark, [(1, 1, 10.0), (1, 4, 30.0)])
+    pipeline.process_batch(first, 0)  # window [0, 10s) still open
+    assert os.listdir(pipeline.evals_path) == []
+    assert pipeline.evaluations().count() == 0
+    assert pipeline.alerts().count() == 0
+
+    closing = car_df(spark, [(1, 12, 50.0)])
+    pipeline.process_batch(closing, 1)  # closes [0, 10s): AVG 20 > 15
+    evals = sorted(pipeline.evaluations().collect())
+    alerts = sorted(pipeline.alerts().collect())
+    assert [(r.query_id, r.agg_value, r.fired) for r in evals] == [(1, 20.0, True)]
+    assert alerts == evals
+
+    pipeline.process_batch(closing, 1)  # replay after the commit
+    assert sorted(pipeline.evaluations().collect()) == evals
+    assert sorted(pipeline.alerts().collect()) == alerts
+    assert pipeline.metrics["alerts_fired"] == 1
+
+
+def test_sink_reads_missing_store_are_empty(spark, pipeline):
+    assert pipeline.alerts().count() == 0
+    assert pipeline.evaluations().columns == pipeline.alerts().columns
+    assert pipeline.evaluations().count() == 0
+    assert pipeline.latency().columns == ["event_ts", "latency_ms"]
+    assert pipeline.latency().count() == 0
+
+
+def test_sink_reads_without_data_files_are_empty(spark, pipeline):
+    """A store holding only commit markers (a 0-row write) reads empty."""
+    import os
+
+    for d in (
+        os.path.join(pipeline.alerts_path, "data", "batch=0"),
+        os.path.join(pipeline.evals_path, "batch=0"),
+        os.path.join(pipeline.latency_path, "batch=0"),
+    ):
+        os.makedirs(d)
+        open(os.path.join(d, "_SUCCESS"), "w").close()
+    assert pipeline.alerts().count() == 0
+    assert pipeline.evaluations().count() == 0
+    assert pipeline.latency().count() == 0
+
+
+@pytest.mark.parametrize("sink", ["alerts", "evaluations", "latency"])
+def test_sink_read_of_corrupt_store_raises(spark, pipeline, sink):
+    """A corrupt store must surface, not read as 'no rows yet'."""
+    import os
+
+    root = {
+        "alerts": os.path.join(pipeline.alerts_path, "data"),
+        "evaluations": pipeline.evals_path,
+        "latency": pipeline.latency_path,
+    }[sink]
+    os.makedirs(os.path.join(root, "batch=0"))
+    with open(os.path.join(root, "batch=0", "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet|footer|magic"):
+        getattr(pipeline, sink)().collect()
+
+
+def test_dropped_rule_json_counted_with_reason(tmp_path, caplog):
+    """Malformed or id-less rule JSON is dropped (the reference's
+    RuleDeserializer contract) but counted by reason and logged, on
+    both the wire (apply_json) and the restart (load) paths."""
+    import logging
+
+    reg = RuleRegistry()
+    with caplog.at_level(logging.WARNING):
+        reg.apply_json("{not json")
+        reg.apply_json(json.dumps(dict(SPEEDING_RULE, queryId=None)))
+        reg.apply_json(json.dumps(SPEEDING_RULE))
+    assert set(reg.rules) == {1}
+    assert reg.dropped == {"JSONDecodeError": 1, "no queryId": 1}
+    assert sum("rule JSON dropped" in r.message for r in caplog.records) == 2
+
+    path = tmp_path / "rules.jsonl"
+    path.write_text(
+        json.dumps(SPEEDING_RULE)
+        + "\n{broken\n"
+        + json.dumps(dict(SPEEDING_RULE, queryId=None))
+        + "\n"
+    )
+    loaded = RuleRegistry.load(str(path))
+    assert set(loaded.rules) == {1}
+    assert loaded.dropped == {"JSONDecodeError": 1, "no queryId": 1}

@@ -116,15 +116,13 @@ def test_build_and_append_meta_rides_the_write(spark, docs, tmp_path):
         _read_meta,
     )
 
-    sc = spark.sparkContext
-
-    def jobs() -> int:
-        return int(sc._jsc.sc().dagScheduler().nextJobId())
+    from activedatawarehouseprototype_spark.measure import JobCounter
 
     path = str(tmp_path / "tix-jobs")
-    j0 = jobs()
-    text_index_build(docs, path, n_buckets=8)
-    build_jobs = jobs() - j0
+    with JobCounter(spark, "text-index") as jobs:
+        j0 = jobs.count()
+        text_index_build(docs, path, n_buckets=8)
+        build_jobs = jobs.count() - j0
     # 3 = shuffle-map + AQE stage + write; the pre-r12 _doc_stats scan
     # added a 4th
     assert build_jobs <= 3, f"build submitted {build_jobs} jobs (budget 3)"
@@ -133,9 +131,26 @@ def test_build_and_append_meta_rides_the_write(spark, docs, tmp_path):
     assert {k: meta[k] for k in truth} == truth
 
     batch = docs.withColumn("doc_id", F.col("doc_id") + 10_000_000)
-    j0 = jobs()
-    text_index_append(batch, path)
-    append_jobs = jobs() - j0
+    with JobCounter(spark, "text-index") as jobs:
+        j0 = jobs.count()
+        text_index_append(batch, path)
+        append_jobs = jobs.count() - j0
     assert append_jobs <= 4, f"append submitted {append_jobs} jobs (budget 4)"
     meta2 = _read_meta(path)
     assert all(meta2[k] == 2 * truth[k] for k in truth)
+
+
+def test_rowless_observation_fallback_counted(spark, tmp_path):
+    """An optimizer-collapsed corpus leaves the meta Observation
+    rowless; the build falls back to one aggregate job, counts the
+    fallback with its reason and still records the right meta."""
+    from activedatawarehouseprototype_spark.operators import text_index as ti
+
+    docs = spark.createDataFrame(
+        [(1, None), (2, None)], "doc_id bigint, text string"
+    )
+    before = ti.obs_fallbacks["rowless observation"]
+    path = str(tmp_path / "rowless")
+    text_index_build(docs, path, n_buckets=4)
+    assert ti.obs_fallbacks["rowless observation"] == before + 1
+    assert ti._read_meta(path)["n_docs"] == 2

@@ -21,6 +21,7 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
 from activedatawarehouseprototype_spark.corpus import QUERIES  # noqa: E402
+from activedatawarehouseprototype_spark.measure import JobCounter  # noqa: E402
 from activedatawarehouseprototype_spark.session import get_spark  # noqa: E402
 
 
@@ -37,9 +38,7 @@ def main() -> None:
     spark = get_spark(app_name="adw-measure")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
-
-    def job_count() -> int:
-        return int(sc._jsc.sc().dagScheduler().nextJobId())
+    jobs = JobCounter(spark, "measure-query")
 
     # warm the parquet-reader stack outside any timed region
     spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -55,15 +54,15 @@ def main() -> None:
             continue
         runs = []
         for i in range(args.runs):
-            sc.setJobDescription(f"measure:{name}#{i}")
-            j0 = job_count()
-            t0 = time.perf_counter()
-            df = fn(spark, args.sf_dir)
-            t_build = time.perf_counter() - t0
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            runs.append((dt, job_count() - j0, t_build))
-            sc.setJobDescription(None)
+            with jobs:
+                j0 = jobs.count()
+                sc.setJobDescription(f"measure:{name}#{i}")
+                t0 = time.perf_counter()
+                df = fn(spark, args.sf_dir)
+                t_build = time.perf_counter() - t0
+                df.write.format("noop").mode("overwrite").save()
+                dt = time.perf_counter() - t0
+                runs.append((dt, jobs.count() - j0, t_build))
         best = min(r[0] for r in runs)
         detail = " ".join(
             f"{dt:.3f}s/{j}j(build {tb:.3f})" for dt, j, tb in runs
