@@ -47,7 +47,17 @@ def _build_parser() -> argparse.ArgumentParser:
     pe.add_argument("--fired-only", action="store_true")
     pe.add_argument("--limit", type=int, default=20, help="rows to print")
 
-    pr = sub.add_parser("run", help="run the active pipeline over a stream")
+    pr = sub.add_parser(
+        "run",
+        help="run the active pipeline over a stream",
+        description="Each micro-batch polls --rules-dir, buffers the "
+        "events, evaluates every active rule over the buffer, writes "
+        "evaluations and alerts under --work-dir, and spawns the child "
+        "rules of fired ones. The --mv-*, --anomaly-*, --drift-*, "
+        "--cusum-* and --mad-* flags each add one optional stage that "
+        "reads the batch and writes its own directory; a stage's "
+        "required flags must be given together.",
+    )
     pr.add_argument("--events-dir", required=True, help="streaming parquet dir")
     pr.add_argument("--rules-dir", required=True, help="watched rule-JSON dir")
     pr.add_argument("--work-dir", required=True)
@@ -867,6 +877,63 @@ def _parse_mv_hist(spec: str | None, flag: str = "--mv-hist"):
         ) from None
 
 
+def _all_or_none(flags: dict) -> bool:
+    """True when every one of a stage's required ``{flag: value}`` is
+    given, False when none is; a subset fails at the command line."""
+    given = [f for f, v in flags.items() if v is not None]
+    if given and len(given) < len(flags):
+        missing = [f for f in flags if f not in given]
+        raise SystemExit(f"{', '.join(given)} needs {', '.join(missing)}")
+    return bool(given)
+
+
+def _run_stages(args) -> list:
+    """The optional pipeline stages the ``run`` flags ask for."""
+    from activedatawarehouseprototype_spark.streaming.stages import (
+        AnomalyStage,
+        CusumGate,
+        DriftGate,
+        MadGate,
+        SummaryMV,
+    )
+
+    stages = []
+    if _all_or_none({"--mv-key": args.mv_key, "--mv-value": args.mv_value}):
+        hist = _parse_mv_hist(args.mv_hist)
+        stages.append(SummaryMV(args.mv_key.split(","), args.mv_value, hist))
+    if _all_or_none({"--anomaly-key": args.anomaly_key, "--anomaly-value": args.anomaly_value}):
+        keys = args.anomaly_key.split(",")
+        stages.append(AnomalyStage(keys, args.anomaly_value, threshold=args.anomaly_threshold))
+    if _all_or_none({"--drift-value": args.drift_value, "--drift-bins": args.drift_bins}):
+        bins = _parse_mv_hist(args.drift_bins, flag="--drift-bins")
+        stages.append(DriftGate(args.drift_value, bins, threshold=args.drift_threshold))
+    if _all_or_none({"--cusum-value": args.cusum_value, "--cusum-target": args.cusum_target}):
+        stages.append(
+            CusumGate(
+                args.cusum_value,
+                args.cusum_target,
+                slack=args.cusum_slack,
+                threshold=args.cusum_threshold,
+            )
+        )
+    mad = {
+        "--mad-value": args.mad_value,
+        "--mad-center": args.mad_center,
+        "--mad-scale": args.mad_scale,
+    }
+    if _all_or_none(mad):
+        stages.append(
+            MadGate(
+                args.mad_value,
+                args.mad_center,
+                args.mad_scale,
+                z=args.mad_z,
+                max_outlier_frac=args.mad_max_outlier_frac,
+            )
+        )
+    return stages
+
+
 def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
 
@@ -886,6 +953,9 @@ def main(argv: list[str] | None = None) -> int:
             )
         )
         return 0
+
+    # flag errors surface before the JVM starts
+    stages = _run_stages(args) if args.cmd == "run" else None
 
     from activedatawarehouseprototype_spark.session import get_spark
 
@@ -2012,6 +2082,9 @@ def main(argv: list[str] | None = None) -> int:
         from activedatawarehouseprototype_spark.streaming.pipeline import (
             ActivePipeline,
         )
+        from activedatawarehouseprototype_spark.sources.rule_source import (
+            DirectoryRuleSource,
+        )
         from activedatawarehouseprototype_spark.streaming.registry import RuleRegistry
 
         import os
@@ -2023,28 +2096,9 @@ def main(argv: list[str] | None = None) -> int:
             registry=registry,
             ts_col=args.ts_col,
             work_dir=args.work_dir,
-            rules_dir=args.rules_dir,
-            mv_key_cols=args.mv_key.split(",") if args.mv_key else None,
-            mv_value_col=args.mv_value,
-            mv_hist_bins=_parse_mv_hist(args.mv_hist),
+            rule_source=DirectoryRuleSource(args.rules_dir),
             alert_cooldown_ms=args.alert_cooldown_ms,
-            anomaly_key_cols=(
-                args.anomaly_key.split(",") if args.anomaly_key else None
-            ),
-            anomaly_value_col=args.anomaly_value,
-            anomaly_threshold=args.anomaly_threshold,
-            drift_value_col=args.drift_value,
-            drift_bins=_parse_mv_hist(args.drift_bins, flag="--drift-bins"),
-            drift_threshold=args.drift_threshold,
-            cusum_value_col=args.cusum_value,
-            cusum_target=args.cusum_target,
-            cusum_slack=args.cusum_slack,
-            cusum_threshold=args.cusum_threshold,
-            mad_value_col=args.mad_value,
-            mad_center=args.mad_center,
-            mad_scale=args.mad_scale,
-            mad_z=args.mad_z,
-            mad_max_outlier_frac=args.mad_max_outlier_frac,
+            stages=stages,
         )
         from activedatawarehouseprototype_spark.catalog import load_parquet
 

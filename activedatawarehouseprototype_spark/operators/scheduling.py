@@ -47,7 +47,13 @@ _KEYS = (
 def single_partition_loop(spark, n_parts: int):
     """No-op unless ``n_parts == 1`` (the caller's measured choice for
     a tiny frame); then pins single-partition non-adaptive scheduling
-    for the scope. Yields True when active."""
+    for the scope. Yields True when active.
+
+    Single-driver-thread contract: the scope sets SESSION-GLOBAL SQL
+    conf, so while it is active no other thread may plan a query on
+    the same session — that query would run with AQE off, one shuffle
+    partition and no broadcast joins, and a scope restored by another
+    thread could switch the loop's own conf back mid-loop."""
     if n_parts != 1:
         yield False
         return

@@ -6,7 +6,12 @@ Reference topology (SURVEY §3.2): events → DynamicKeyFunction (filter,
 fan-out, key) → shuffle → DynamicQueryFunction (buffer, window, agg,
 threshold) → alerts + spawned rules. Here each ``foreachBatch``:
 
-1. TTL-sweep the registry (F4/C3).
+1. Poll the rule source, optionally quarantine rows failing the ingest
+   constraints, and TTL-sweep the registry (F4/C3). Then each of the
+   ``stages`` list's optional add-ons (streaming/stages.py: summary MV,
+   anomaly, drift, CUSUM and MAD gates) reads the batch and writes its
+   own directories; they neither read nor feed the steps below, and an
+   empty list costs zero jobs.
 2. Maintain the shared event buffer — the Spark analogue of the
    reference's per-key ``MapState`` buffer with widest-window eviction
    (DynamicQueryFunction.java:42-51,243-266): a parquet-backed table
@@ -95,8 +100,6 @@ class ActivePipeline:
     # (sources/rule_source.py) — a watched directory here, a Kafka
     # consumer in a real deployment; applied at the start of each
     # micro-batch, so rules register mid-stream without restart.
-    # ``rules_dir`` is sugar for rule_source=DirectoryRuleSource(dir).
-    rules_dir: str | None = None
     rule_source: "RuleSource | None" = None
     throttle: SpawnThrottle = dc_field(default_factory=SpawnThrottle)
     id_worker: SnowflakeIdWorker = dc_field(default_factory=SnowflakeIdWorker)
@@ -115,19 +118,6 @@ class ActivePipeline:
     # Size it to the source's disorder bound (e.g. out_of_order_events'
     # max_delay_ms); 0 = close windows at the frontier.
     lateness_ms: int = 0
-    # optional incrementally-maintained summary MV (active-warehouse
-    # dashboard table): when both are set, every batch's events also
-    # merge into a per-key (n, total, mn, mx) aggregate at
-    # ``work_dir/summary_mv`` via operators/warehouse.py
-    # incremental_agg_mv — O(|batch| + |MV|) per batch, batch-id
-    # idempotent, never rescans history. Read it back with
-    # ``summary_mv()``.
-    mv_key_cols: "list[str] | None" = None
-    mv_value_col: str | None = None
-    # optional mergeable histogram column on the summary MV —
-    # (lo, hi, n_bins); read percentiles with
-    # warehouse.estimate_percentile (error <= one bin width)
-    mv_hist_bins: "tuple[float, float, int] | None" = None
     # two-phase salted aggregation for hot composite keys (power-law
     # key skew): spreads each (rule, key, window) group over N salts
     # before the final merge. None = plain single-stage agg.
@@ -166,82 +156,15 @@ class ActivePipeline:
     # carry the batch-id marker (incremental_join_mv), dim updates are
     # idempotent overwrite commits (apply_cdc_to_join_mv).
     enrich_on: str | None = None
-    # rolling z-score anomaly detection (optional): when
-    # anomaly_key_cols + anomaly_value_col are set, every batch's
-    # events aggregate into (key, bucket) partials appended to
-    # ``work_dir/anomaly_history`` (per-batch overwrite dir → replay
-    # idempotent), and the batch's touched buckets are scored against
-    # each key's OWN trailing baseline (operators/timeseries.py
-    # rolling_zscore over the aggregated history — the current bucket
-    # never pollutes its own baseline); |z| > anomaly_threshold rows
-    # land in ``work_dir/anomalies/batch=<id>``. This is the adaptive-
-    # threshold complement to fixed rule limits: "alert when this key
-    # deviates from its own recent behavior", no per-key constant to
-    # tune. A bucket split across batches is re-scored with its
-    # updated total in each touching batch (each batch's anomaly dir
-    # is a snapshot as-of that batch). Read back with ``anomalies()``.
-    anomaly_key_cols: "list[str] | None" = None
-    anomaly_value_col: str | None = None
-    anomaly_bucket_ms: int = 3_600_000
-    anomaly_lookback: int = 7
-    anomaly_min_periods: int = 3
-    anomaly_threshold: float = 3.0
-    # distribution-drift gate (optional): when drift_value_col +
-    # drift_bins are set, every batch's value histogram (FIXED bin
-    # edges — the incremental reference can't re-bin) is PSI-scored
-    # against the accumulated history of all PRIOR batches, per
-    # drift_group_cols slice. Scores land in ``work_dir/drift/
-    # batch=<id>`` (per-batch overwrite — replay idempotent, same
-    # shape as the anomaly/quarantine writes); history partials in
-    # ``work_dir/drift_history``. Scoring is skipped while the
-    # reference holds < drift_min_ref_rows (no stable baseline yet).
-    # This is the batch-level complement of the row-level quarantine
-    # gate: "the rows are individually fine but the DISTRIBUTION
-    # moved" — read back with ``drift_scores()``.
-    drift_value_col: str | None = None
-    drift_bins: "tuple[float, float, int] | None" = None  # (lo, hi, n_bins)
-    drift_group_cols: "list[str] | None" = None
-    drift_threshold: float = 0.25
-    drift_min_ref_rows: int = 100
-    # CUSUM mean-shift gate (optional): when cusum_value_col +
-    # cusum_target are set, each batch's per-slice MEAN feeds the
-    # two-sided Page recurrence S± = max(0, S± ± (mean - target) -
-    # slack), carried across batches in ``work_dir/cusum_state/
-    # batch=<id>`` snapshots (replay reads the LATEST state with
-    # batch < id, so re-delivering a batch rescores identically).
-    # Alarms when either side exceeds cusum_threshold. This catches
-    # the drift the PSI gate is least sensitive to — a SMALL mean
-    # shift persisting over many batches (PSI needs the histogram to
-    # visibly move; CUSUM integrates the bias). Scores land in
-    # ``work_dir/cusum/batch=<id>`` — read back with
-    # ``cusum_scores()``. State snapshots are scalars per slice;
-    # snapshots older than the previous few batches are janitored.
-    cusum_value_col: str | None = None
-    cusum_target: float | None = None
-    cusum_slack: float = 0.0
-    cusum_threshold: float = 5.0
-    cusum_group_cols: "list[str] | None" = None
-    # MAD outlier-burst gate (optional): when mad_value_col +
-    # mad_center + mad_scale are set, each batch's per-slice OUTLIER
-    # FRACTION — rows with |v - center| > z * scale — is scored and
-    # alarms past mad_max_outlier_frac. The robust third leg of the
-    # gate family: PSI needs the whole histogram to move, CUSUM
-    # integrates a persistent mean bias (and a heavy two-sided tail
-    # can cancel out of the mean entirely); the MAD gate catches the
-    # burst of individually-extreme rows. center/scale come from a
-    # training window (operators/robust.py::mad_outlier_stats is the
-    # offline fitter). Stateless per batch — scores land in
-    # ``work_dir/madgate/batch=<id>`` (per-batch overwrite, replay
-    # idempotent by construction) — read back with ``mad_scores()``.
-    mad_value_col: str | None = None
-    mad_center: float | None = None
-    mad_scale: float | None = None
-    mad_z: float = 3.0
-    mad_max_outlier_frac: float = 0.05
-    mad_group_cols: "list[str] | None" = None
+    # optional per-batch add-ons (streaming/stages.py: summary MV,
+    # anomaly, drift, CUSUM and MAD gates), run in order on every batch
+    # before the buffer write; read one back with ``stage_output``.
+    stages: list = dc_field(default_factory=list)
+    # this batch's emitted-alert clocks, committed to the cooldown
+    # state only after the alerts sink write
+    _cooldown_pending: DataFrame | None = None
     # per-rule emission high-watermark: query_id -> max emitted window_end (ms)
     _emitted_wm: dict[int, int] = dc_field(default_factory=dict)
-    _has_buffer: bool = False
     _batch_count: int = 0
     # event-time high watermark: max event ts (ms) across all batches.
     # Retention reads use the PREVIOUS batch's value so a window that
@@ -286,65 +209,21 @@ class ActivePipeline:
     )
 
     def __post_init__(self) -> None:
-        # half-specified anomaly config silently skipping the stage is
-        # the kind of mistake a user discovers only when the anomalies
-        # dir never appears — fail at construction instead
-        if bool(self.anomaly_key_cols) != bool(self.anomaly_value_col):
-            raise ValueError(
-                "anomaly detection needs BOTH anomaly_key_cols and "
-                "anomaly_value_col (got only one)"
-            )
-        # same fail-at-construction contract for the drift gate
-        if bool(self.drift_value_col) != bool(self.drift_bins):
-            raise ValueError(
-                "drift detection needs BOTH drift_value_col and "
-                "drift_bins=(lo, hi, n_bins) (got only one)"
-            )
-        if self.drift_bins is not None:
-            lo, hi, bins = self.drift_bins
-            if not (hi > lo and int(bins) > 0):
-                raise ValueError(
-                    f"drift_bins needs hi > lo and n_bins > 0, got {self.drift_bins}"
-                )
-        # same fail-at-construction contract for the CUSUM gate
-        if bool(self.cusum_value_col) != (self.cusum_target is not None):
-            raise ValueError(
-                "CUSUM detection needs BOTH cusum_value_col and "
-                "cusum_target (got only one)"
-            )
-        # ... and for the MAD gate (all three or none; scale > 0
-        # because |v - center| > z*0 would flag every non-center row)
-        mad_parts = (
-            bool(self.mad_value_col),
-            self.mad_center is not None,
-            self.mad_scale is not None,
-        )
-        if any(mad_parts) and not all(mad_parts):
-            raise ValueError(
-                "MAD gate needs ALL of mad_value_col, mad_center and "
-                "mad_scale (got a subset)"
-            )
-        if self.mad_scale is not None and not self.mad_scale > 0:
-            raise ValueError(
-                f"mad_scale must be positive, got {self.mad_scale}"
-            )
+        # two stages writing one directory would silently overwrite
+        # each other's output (e.g. two DriftGates on different columns)
+        written = [d for s in self.stages for d in s.dirs]
+        clash = sorted({d for d in written if written.count(d) > 1})
+        if clash:
+            raise ValueError(f"stages write the same directories: {clash}")
         if self.work_dir is None:
             self.work_dir = tempfile.mkdtemp(prefix="adw-pipeline-")
-        if self.rule_source is None and self.rules_dir:
-            from activedatawarehouseprototype_spark.sources.rule_source import (
-                DirectoryRuleSource,
-            )
-
-            self.rule_source = DirectoryRuleSource(self.rules_dir)
         os.makedirs(self.alerts_path, exist_ok=True)
-        # recovery: reload emission watermarks + detect an existing
-        # buffer so a restarted pipeline continues instead of
-        # re-emitting everything (the registry persists separately).
+        # recovery: reload emission watermarks so a restarted pipeline
+        # continues instead of re-emitting everything (the registry
+        # persists separately).
         if os.path.exists(self._wm_path):
-            import json as _json
-
             with open(self._wm_path) as f:
-                raw = _json.load(f)
+                raw = json.load(f)
             self._max_event_ts = raw.pop("__max_event_ts__", None)
             self._pruned_to = raw.pop("__pruned_to__", None)
             rawwatch = raw.pop("__watching__", [])
@@ -357,7 +236,6 @@ class ActivePipeline:
                 for e in rawwatch
             }
             self._emitted_wm = {int(k): v for k, v in raw.items()}
-        self._has_buffer = bool(self._buffer_buckets())
 
     @property
     def _wm_path(self) -> str:
@@ -372,10 +250,6 @@ class ActivePipeline:
         sees every firing (spawn throttling is its own mechanism, C7);
         only the alert sink is gated."""
         from pyspark.sql import Window
-
-        from activedatawarehouseprototype_spark.operators.warehouse import (
-            merge_upsert,
-        )
 
         state_path = os.path.join(self.alerts_path, "cooldown_state")
         # a crash mid-swap leaves the state only in `.old`; a bare
@@ -425,7 +299,7 @@ class ActivePipeline:
             merge_upsert,
         )
 
-        emitted = getattr(self, "_cooldown_pending", None)
+        emitted = self._cooldown_pending
         if emitted is None:
             return
         self._cooldown_pending = None
@@ -437,8 +311,6 @@ class ActivePipeline:
         )
 
     def _persist_watermarks(self) -> None:
-        import json as _json
-
         tmp = self._wm_path + ".tmp"
         payload = {str(k): v for k, v in self._emitted_wm.items()}
         if self._max_event_ts is not None:
@@ -450,7 +322,7 @@ class ActivePipeline:
                 [int(q), int(w)] for q, w in self._watching.items()
             )
         with open(tmp, "w") as f:
-            _json.dump(payload, f)
+            json.dump(payload, f)
         os.replace(tmp, self._wm_path)
 
     # -- paths ---------------------------------------------------------------
@@ -467,447 +339,11 @@ class ActivePipeline:
     def evals_path(self) -> str:
         return os.path.join(self.work_dir, "evaluations")
 
-    @property
-    def summary_mv_path(self) -> str:
-        return os.path.join(self.work_dir, "summary_mv")
-
-    def summary_mv(self) -> DataFrame:
-        """Current state of the incrementally-maintained summary MV
-        (requires ``mv_key_cols``/``mv_value_col``)."""
-        return self.spark.read.parquet(self.summary_mv_path)
-
-    @property
-    def anomaly_history_path(self) -> str:
-        return os.path.join(self.work_dir, "anomaly_history")
-
-    @property
-    def anomalies_path(self) -> str:
-        return os.path.join(self.work_dir, "anomalies")
-
-    def anomalies(self) -> DataFrame:
-        """All emitted z-score anomalies (requires
-        ``anomaly_key_cols``/``anomaly_value_col``): one row per
-        (key, bucket_ms) flagged in some batch, with the batch id as
-        the ``batch`` partition column."""
-        return self.spark.read.parquet(self.anomalies_path)
-
-    ANOMALY_COMPACT_EVERY = 64
-
-    def _update_anomalies(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Per-batch adaptive anomaly stage. History partials live in
-        per-batch OVERWRITE dirs (replay idempotent, same shape as the
-        buffer/quarantine writes); scoring aggregates the full history
-        per (key, bucket) — buckets split across batches score against
-        their updated total — and keeps only this batch's touched
-        buckets with |z| above the threshold. Like the drift gate's
-        history, partials fold into a reserved ``batch=-1`` base every
-        ANOMALY_COMPACT_EVERY batches (crash-safe staging swap;
-        strictly-older batches only, so the latest-batch replay stays
-        an idempotent overwrite) — directory count stays bounded over
-        the stream's life."""
-        from activedatawarehouseprototype_spark.operators.timeseries import (
-            rolling_zscore,
-        )
-        from activedatawarehouseprototype_spark.operators.warehouse import (
-            commit_swap,
-            recover_swap,
-        )
-
-        recover_swap(self.anomaly_history_path)
-        keys = self.anomaly_key_cols
-        bms = self.anomaly_bucket_ms
-        bucket = (
-            F.floor(F.unix_millis(F.col(self.ts_col)) / bms) * bms
-        ).cast("bigint").alias("bucket_ms")
-        part = (
-            batch_df.groupBy(*keys, bucket)
-            .agg(
-                F.sum(F.col(self.anomaly_value_col).cast("double")).alias("x")
-            )
-            .localCheckpoint()  # one materialization: write + semi-join
-        )
-        part.write.mode("overwrite").parquet(
-            os.path.join(self.anomaly_history_path, f"batch={batch_id}")
-        )
-        # per-(key, bucket) totals for THIS BATCH'S KEYS ONLY — the
-        # baseline only needs the touched keys' history, and without
-        # the key prefilter the per-batch window would re-score every
-        # key ever seen (O(total stream history) per batch). The
-        # `batch` partition column from dir discovery is metadata, not
-        # data — drop it via the column selection.
-        hist = (
-            self.spark.read.parquet(self.anomaly_history_path)
-            .join(
-                F.broadcast(part.select(*keys).distinct()), keys, "left_semi"
-            )
-            .groupBy(*keys, "bucket_ms")
-            .agg(F.sum("x").alias("x"))
-        )
-        scored = rolling_zscore(
-            hist,
-            key_col=keys,
-            order_col="bucket_ms",
-            value_col="x",
-            lookback=self.anomaly_lookback,
-            min_periods=self.anomaly_min_periods,
-            round_to=4,
-            threshold=self.anomaly_threshold,
-        )
-        flagged = (
-            scored.filter(F.col("anomaly"))
-            # only buckets THIS batch touched emit now (earlier buckets
-            # were scored by their own batches)
-            .join(part.select(*keys, "bucket_ms"), [*keys, "bucket_ms"],
-                  "left_semi")
-            .select(*keys, "bucket_ms", "x", "zscore")
-        )
-        flagged.write.mode("overwrite").parquet(
-            os.path.join(self.anomalies_path, f"batch={batch_id}")
-        )
-
-        if batch_id > 0 and batch_id % self.ANOMALY_COMPACT_EVERY == 0:
-            base = (
-                self.spark.read.parquet(self.anomaly_history_path)
-                .filter(F.col("batch") != batch_id)
-                .groupBy(*keys, "bucket_ms")
-                .agg(F.sum("x").alias("x"))
-            )
-            staging = self.anomaly_history_path + ".staging"
-            base.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(staging, "batch=-1")
-            )
-            part.write.mode("overwrite").parquet(
-                os.path.join(staging, f"batch={batch_id}")
-            )
-            commit_swap(self.anomaly_history_path, staging)
-
-    @property
-    def drift_history_path(self) -> str:
-        return os.path.join(self.work_dir, "drift_history")
-
-    @property
-    def drift_path(self) -> str:
-        return os.path.join(self.work_dir, "drift")
-
-    @property
-    def cusum_state_path(self) -> str:
-        return os.path.join(self.work_dir, "cusum_state")
-
-    @property
-    def cusum_path(self) -> str:
-        return os.path.join(self.work_dir, "cusum")
-
-    def cusum_scores(self) -> DataFrame:
-        """Per-batch CUSUM statistics (requires ``cusum_value_col`` +
-        ``cusum_target``): one row per (group slice, batch) with the
-        carried s_pos/s_neg and ``alarm`` = either side above the
-        threshold."""
-        return self.spark.read.parquet(self.cusum_path)
-
-    def drift_scores(self) -> DataFrame:
-        """Per-batch PSI drift scores (requires ``drift_value_col`` +
-        ``drift_bins``): one row per (group slice, batch) once the
-        reference held enough mass, with ``drifted`` = psi above the
-        threshold. The ``batch`` partition column names the scoring
-        batch."""
-        return self.spark.read.parquet(self.drift_path)
-
-    @property
-    def mad_path(self) -> str:
-        return os.path.join(self.work_dir, "madgate")
-
-    def mad_scores(self) -> DataFrame:
-        """Per-batch MAD outlier-burst scores (requires the
-        mad_value_col/mad_center/mad_scale trio): one row per (group
-        slice, batch) with the outlier fraction and ``alarm`` =
-        fraction above ``mad_max_outlier_frac``."""
-        return self.spark.read.parquet(self.mad_path)
-
-    def _update_mad(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Per-batch MAD outlier-burst stage: ONE skinny agg per slice
-        counts rows beyond z * scale of the robust center. Stateless —
-        the per-batch overwrite makes replay idempotent without any
-        carried-state protocol."""
-        groups = list(self.mad_group_cols or [])
-        dev = F.abs(
-            F.col(self.mad_value_col).cast("double")
-            - F.lit(float(self.mad_center))
-        )
-        cut = F.lit(float(self.mad_z)) * F.lit(float(self.mad_scale))
-        scored = (
-            batch_df.filter(F.col(self.mad_value_col).isNotNull())
-            .groupBy(*groups)
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("batch_rows"),
-                F.sum((dev > cut).cast("bigint"))
-                .cast("bigint")
-                .alias("n_outliers"),
-            )
-            .select(
-                *groups,
-                "batch_rows",
-                "n_outliers",
-                (F.col("n_outliers") / F.col("batch_rows")).alias(
-                    "outlier_frac"
-                ),
-            )
-            .select(
-                "*",
-                (
-                    F.col("outlier_frac")
-                    > F.lit(float(self.mad_max_outlier_frac))
-                ).alias("alarm"),
-            )
-        )
-        scored.write.mode("overwrite").parquet(
-            os.path.join(self.mad_path, f"batch={batch_id}")
-        )
-
-    def _drift_bin(self) -> "F.Column":
-        lo, hi, bins = self.drift_bins
-        width = (float(hi) - float(lo)) / int(bins)
-        raw = F.floor((F.col("_v") - F.lit(float(lo))) / F.lit(width))
-        return F.least(
-            F.greatest(raw, F.lit(0)), F.lit(int(bins) - 1)
-        ).cast("int")
-
-    DRIFT_COMPACT_EVERY = 64
-
-    CUSUM_STATE_RETAIN = 8
-
-    def _update_cusum(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Per-batch CUSUM mean-shift stage. The batch touches the
-        heavy data with ONE skinny mean agg per slice; the recurrence
-        update joins that against the latest carried state (batch <
-        id — a replay of batch id re-reads the same prior state and
-        rescores identically under foreachBatch's sequential-epoch
-        replay model). A slice absent from this batch keeps its state
-        unchanged (carried forward), so an intermittent slice's walk
-        is not reset by quiet batches. State snapshots are scalars per
-        slice; snapshots older than CUSUM_STATE_RETAIN batches are
-        janitored after a successful write (only batch-1 is ever read,
-        and an older batch never replays after a newer one ran)."""
-        groups = list(self.cusum_group_cols or [])
-        cur = (
-            batch_df.select(
-                *groups, F.col(self.cusum_value_col).cast("double").alias("_v")
-            )
-            .filter(F.col("_v").isNotNull())
-            .groupBy(*groups)
-            .agg(F.avg("_v").alias("_mean"), F.count(F.lit(1)).alias("_n"))
-        )
-        prior = None
-        if os.path.exists(self.cusum_state_path):
-            hist = self.spark.read.parquet(self.cusum_state_path).filter(
-                F.col("batch") < batch_id
-            )
-            latest = hist.groupBy(*groups).agg(
-                F.max_by(
-                    F.struct("s_pos", "s_neg", "n_batches"), F.col("batch")
-                ).alias("_st")
-            )
-            prior = latest.select(
-                *groups,
-                F.col("_st.s_pos").alias("_p_pos"),
-                F.col("_st.s_neg").alias("_p_neg"),
-                F.col("_st.n_batches").alias("_p_n"),
-            )
-        if prior is not None:
-            joined = cur.join(prior, groups, "full_outer") if groups else (
-                cur.crossJoin(prior)
-            )
-        else:
-            joined = cur.select(
-                "*",
-                F.lit(None).cast("double").alias("_p_pos"),
-                F.lit(None).cast("double").alias("_p_neg"),
-                F.lit(None).cast("long").alias("_p_n"),
-            )
-        zero = F.lit(0.0)
-        p_pos = F.coalesce("_p_pos", zero)
-        p_neg = F.coalesce("_p_neg", zero)
-        tgt = F.lit(float(self.cusum_target))
-        slk = F.lit(float(self.cusum_slack))
-        # a slice with no rows THIS batch carries state forward
-        has_cur = F.col("_mean").isNotNull()
-        s_pos = F.when(
-            has_cur, F.greatest(zero, p_pos + (F.col("_mean") - tgt - slk))
-        ).otherwise(p_pos)
-        s_neg = F.when(
-            has_cur, F.greatest(zero, p_neg + (tgt - slk - F.col("_mean")))
-        ).otherwise(p_neg)
-        state = joined.select(
-            *groups,
-            s_pos.alias("s_pos"),
-            s_neg.alias("s_neg"),
-            (
-                F.coalesce("_p_n", F.lit(0))
-                + has_cur.cast("long")
-            ).alias("n_batches"),
-            F.col("_mean").alias("batch_mean"),
-            F.coalesce("_n", F.lit(0)).alias("batch_rows"),
-        ).localCheckpoint()  # one materialization: state write + score write
-        state.select(*groups, "s_pos", "s_neg", "n_batches").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self.cusum_state_path, f"batch={batch_id}"))
-        thr = F.lit(float(self.cusum_threshold))
-        state.select(
-            *groups,
-            "batch_mean",
-            "batch_rows",
-            "n_batches",
-            F.round("s_pos", 9).alias("s_pos"),
-            F.round("s_neg", 9).alias("s_neg"),
-            ((F.col("s_pos") > thr) | (F.col("s_neg") > thr)).alias("alarm"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(self.cusum_path, f"batch={batch_id}")
-        )
-        # janitor: drop state snapshots older than the retain horizon
-        horizon = batch_id - self.CUSUM_STATE_RETAIN
-        if horizon > 0 and os.path.exists(self.cusum_state_path):
-            for d in os.listdir(self.cusum_state_path):
-                if d.startswith("batch="):
-                    try:
-                        b = int(d.split("=", 1)[1])
-                    except ValueError:
-                        continue
-                    if b < horizon:
-                        shutil.rmtree(
-                            os.path.join(self.cusum_state_path, d),
-                            ignore_errors=True,
-                        )
-
-
-    def _update_drift(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Per-batch distribution-drift stage: the batch's fixed-bin
-        value histogram is written as a history partial (per-batch
-        overwrite — replay idempotent), then PSI-scored against the
-        accumulated histogram of all PRIOR batches (the read excludes
-        this batch's partition, so a replay scores identically —
-        under foreachBatch's actual replay model, which re-delivers
-        the LATEST batch: epochs are sequential, an older batch never
-        replays after newer ones have run).
-        Out-of-range values clamp to the edge bins — out-of-range mass
-        IS drift signal, not an error. Cost: the heavy data is touched
-        by one map-side-combined histogram agg (|groups|·|bins| skinny
-        rows); everything after is arithmetic on those rows.
-
-        History partials would otherwise accumulate one directory per
-        batch FOREVER (rows are skinny but directory listings are
-        O(#batches) — the cost that matters at 10^5 micro-batches), so
-        every DRIFT_COMPACT_EVERY batches the prior-batch partials fold
-        into a single reserved ``batch=-1`` base partition via the
-        crash-safe staging swap. Replay stays exact: the base never
-        contains the compacting batch itself, and the scoring read's
-        ``batch != id`` exclusion is unaffected by folding strictly
-        older partials together."""
-        from activedatawarehouseprototype_spark.operators.warehouse import (
-            commit_swap,
-            recover_swap,
-        )
-
-        recover_swap(self.drift_history_path)
-        groups = list(self.drift_group_cols or [])
-        part = (
-            batch_df.select(
-                *groups, F.col(self.drift_value_col).cast("double").alias("_v")
-            )
-            .filter(F.col("_v").isNotNull())
-            .groupBy(*groups, self._drift_bin().alias("bin"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()  # one materialization: write + score
-        )
-        part.write.mode("overwrite").parquet(
-            os.path.join(self.drift_history_path, f"batch={batch_id}")
-        )
-        ref = (
-            self.spark.read.parquet(self.drift_history_path)
-            .filter(F.col("batch") != batch_id)
-            .groupBy(*groups, "bin")
-            .agg(F.sum("n").alias("nr"))
-        )
-        joined = part.select(*groups, "bin", F.col("n").alias("nc")).join(
-            ref, [*groups, "bin"], "full_outer"
-        )
-        tot = joined.groupBy(*groups).agg(
-            F.sum(F.coalesce("nr", F.lit(0))).alias("tr"),
-            F.sum(F.coalesce("nc", F.lit(0))).alias("tc"),
-        )
-        jt = (
-            joined.join(F.broadcast(tot), groups)
-            if groups
-            else joined.crossJoin(F.broadcast(tot))
-        )
-        e = F.lit(1e-6)
-        r_p = F.coalesce("nr", F.lit(0)).cast("double") / F.col("tr") + e
-        c_p = F.coalesce("nc", F.lit(0)).cast("double") / F.col("tc") + e
-        scored = (
-            jt.filter(
-                (F.col("tr") >= self.drift_min_ref_rows) & (F.col("tc") > 0)
-            )
-            .groupBy(*groups)
-            .agg(
-                F.max("tr").cast("bigint").alias("n_ref"),
-                F.max("tc").cast("bigint").alias("n_cur"),
-                F.round(F.sum((c_p - r_p) * F.log(c_p / r_p)), 6).alias("psi"),
-            )
-            # a GLOBAL agg (no group cols) over zero surviving rows
-            # still emits one all-NULL row — that's "not scorable yet",
-            # not a score
-            .filter(F.col("n_ref").isNotNull())
-            .select(
-                *groups,
-                "n_ref",
-                "n_cur",
-                "psi",
-                (F.col("psi") > F.lit(float(self.drift_threshold))).alias(
-                    "drifted"
-                ),
-            )
-        )
-        scored.write.mode("overwrite").parquet(
-            os.path.join(self.drift_path, f"batch={batch_id}")
-        )
-
-        if batch_id > 0 and batch_id % self.DRIFT_COMPACT_EVERY == 0:
-            # fold everything EXCEPT this batch into the batch=-1 base
-            # (this batch's partial must stay separate so its replay
-            # exclusion keeps working); staging + atomic swap so a
-            # crash leaves either layout, never a mix
-            base = (
-                self.spark.read.parquet(self.drift_history_path)
-                .filter(F.col("batch") != batch_id)
-                .groupBy(*groups, "bin")
-                .agg(F.sum("n").alias("n"))
-            )
-            staging = self.drift_history_path + ".staging"
-            base.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(staging, "batch=-1")
-            )
-            part.write.mode("overwrite").parquet(
-                os.path.join(staging, f"batch={batch_id}")
-            )
-            commit_swap(self.drift_history_path, staging)
-
-    def summary_percentile(self, key: dict, p: float) -> float:
-        """Approximate percentile of ``mv_value_col`` for one MV key
-        from the mergeable histogram (requires ``mv_hist_bins``; error
-        ≤ one bin width). ``key`` maps each of ``mv_key_cols`` to its
-        value; the read is one filtered MV row — control-plane cost."""
-        if not self.mv_hist_bins:
-            raise ValueError("summary_percentile requires mv_hist_bins")
-        from activedatawarehouseprototype_spark.operators.warehouse import (
-            estimate_percentile,
-        )
-
-        df = self.summary_mv()
-        for k, v in key.items():
-            df = df.filter(F.col(k) == v)
-        rows = df.select("hist").collect()
-        if not rows:
-            raise KeyError(f"no MV row for {key}")
-        lo, hi, _ = self.mv_hist_bins
-        return estimate_percentile(list(rows[0]["hist"]), p, lo, hi)
+    def stage_output(self, stage) -> DataFrame:
+        """What one of ``stages`` wrote to ``work_dir/<stage.dirs[0]>``:
+        the summary MV's current state, or every batch's gate scores
+        with the scoring batch id as the ``batch`` partition column."""
+        return self.spark.read.parquet(os.path.join(self.work_dir, stage.dirs[0]))
 
     @property
     def latency_path(self) -> str:
@@ -1035,45 +471,11 @@ class ActivePipeline:
             self._clear_buffer()
             self.registry.clear_state_requested = False
 
-        # (1b2) incremental summary MV (optional): merge this batch's
-        # mergeable partials into the persisted per-key aggregate.
-        # Runs on the pre-observe frame (its job must not populate the
-        # Observation ahead of the buffer write) and passes batch_id
-        # so foreachBatch replays after a restart are no-ops.
-        if self.mv_key_cols and self.mv_value_col:
-            from activedatawarehouseprototype_spark.operators.warehouse import (
-                incremental_agg_mv,
-            )
-
-            incremental_agg_mv(
-                self.spark,
-                self.summary_mv_path,
-                batch_df,
-                self.mv_key_cols,
-                self.mv_value_col,
-                batch_id=batch_id,
-                hist_bins=self.mv_hist_bins,
-            )
-
-        # (1b3) rolling z-score anomaly stage (optional): history
-        # append + adaptive-baseline scoring of this batch's buckets
-        if self.anomaly_key_cols and self.anomaly_value_col:
-            self._update_anomalies(batch_df, batch_id)
-
-        # (1b4) distribution-drift gate (optional): batch histogram
-        # PSI-scored against all prior batches' accumulated histogram
-        if self.drift_value_col and self.drift_bins:
-            self._update_drift(batch_df, batch_id)
-
-        # (1b5) CUSUM mean-shift gate (optional): per-slice batch mean
-        # through the carried two-sided Page recurrence
-        if self.cusum_value_col and self.cusum_target is not None:
-            self._update_cusum(batch_df, batch_id)
-
-        # (1b6) MAD outlier-burst gate (optional): per-slice fraction
-        # of rows beyond z * scale of the robust center
-        if self.mad_value_col and self.mad_scale is not None:
-            self._update_mad(batch_df, batch_id)
+        # (1b2) optional per-batch stages (streaming/stages.py). They
+        # run on the pre-observe frame: their jobs must not populate the
+        # Observation ahead of the buffer write.
+        for stage in self.stages:
+            stage.apply(self, batch_df, batch_id)
 
         # (1b) observed batch metrics (ingest count + K3 latency) —
         # df.observe piggybacks the buffer write below, so NO extra
@@ -1482,7 +884,6 @@ class ActivePipeline:
             os.path.join(self.buffer_path, f"{self.BATCH_COL}={batch_id}")
         )
         buckets = self._buffer_buckets()
-        self._has_buffer = bool(buckets)
 
         # the event-time high watermark (_max_event_ts) is advanced by
         # the CALLER from the Observation the buffer write populates —
@@ -1501,7 +902,7 @@ class ActivePipeline:
         cov_candidates = [h for h in (horizon, self._pruned_to) if h is not None]
         self._cov_start = max(cov_candidates) if cov_candidates else None
 
-        if not self._has_buffer:
+        if not buckets:
             # Empty first micro-batch: nothing was ever written, so the
             # directory has no data files and the read below would fail
             # with 'Unable to infer schema'. The batch-shaped empty
@@ -1576,7 +977,6 @@ class ActivePipeline:
     def _clear_buffer(self) -> None:
         if os.path.exists(self.buffer_path):
             shutil.rmtree(self.buffer_path)
-        self._has_buffer = False
         self._emitted_wm.clear()
         self._max_event_ts = None
         self._pruned_to = None

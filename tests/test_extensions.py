@@ -585,7 +585,10 @@ def test_stratified_sample_rates(spark):
 
 def test_cli_run_subcommand_e2e(spark, tmp_path):
     """`cli run --once` drains a parquet stream through the active
-    pipeline with rules from the watched dir and writes alerts."""
+    pipeline with rules from the watched dir and writes alerts. The
+    stage flags build their stages (each gate's output directory holds
+    rows), and half of a stage's required flags fails at the command
+    line."""
     import datetime as dt
     import json as _json
 
@@ -624,6 +627,48 @@ def test_cli_run_subcommand_e2e(spark, tmp_path):
     hists = {r.carId: list(r.hist) for r in rows}
     assert hists[9][6] == 1 and sum(hists[9]) == 1
     assert hists[7][4] == 1 and sum(hists[7]) == 1
+
+    # every gate stage, on a second stream with no rules: four flat
+    # hours for car 1, then a spike hour the anomaly stage flags within
+    # the first batch; its 120 rows are the drift gate's reference for
+    # the second run's batch
+    gates = [
+        "--anomaly-key", "carId", "--anomaly-value", "speed",
+        "--drift-value", "speed", "--drift-bins", "0,1000,10",
+        "--cusum-value", "speed", "--cusum-target", "50",
+        "--mad-value", "speed", "--mad-center", "50", "--mad-scale", "1",
+    ]
+    gate_rows = [
+        (1, base + dt.timedelta(hours=h, seconds=s), 500.0 if h == 4 else 49.0 + h % 3)
+        for h in range(5)
+        for s in range(24)
+    ]
+    schema = "carId int, ts timestamp, speed double"
+    gate_events = str(tmp_path / "gate_ev")
+    spark.createDataFrame(gate_rows, schema).repartition(1).write.parquet(gate_events)
+    (tmp_path / "no_rules").mkdir()
+    gate_work = tmp_path / "gate_work"
+    run_gates = [
+        "run", "--events-dir", gate_events, "--rules-dir", str(tmp_path / "no_rules"),
+        "--work-dir", str(gate_work), "--once", *gates,
+    ]
+    assert main(run_gates) == 0
+    spark.createDataFrame(
+        [(1, base + dt.timedelta(hours=5), 50.0)], schema
+    ).repartition(1).write.mode("append").parquet(gate_events)
+    assert main(run_gates) == 0
+    for out in ("anomalies", "drift", "cusum", "madgate"):
+        assert spark.read.parquet(str(gate_work / out)).count() > 0, out
+
+    # --cusum-value without --cusum-target: non-zero exit
+    with pytest.raises(SystemExit) as exc:
+        main([
+            "run", "--events-dir", gate_events, "--rules-dir", str(tmp_path / "no_rules"),
+            "--work-dir", str(tmp_path / "half_work"), "--once",
+            "--cusum-value", "speed",
+        ])
+    assert exc.value.code not in (0, None)
+    assert "--cusum-target" in str(exc.value.code)
 
 
 def test_curation_pipeline_end_to_end(spark):

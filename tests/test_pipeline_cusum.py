@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from activedatawarehouseprototype_spark.streaming.pipeline import ActivePipeline
 from activedatawarehouseprototype_spark.streaming.registry import RuleRegistry
+from activedatawarehouseprototype_spark.streaming.stages import CusumGate
 
 
 def _reg():
@@ -51,22 +52,17 @@ def _pipe(spark, tmp_path, **kw):
         spark=spark,
         registry=_reg(),
         work_dir=str(tmp_path / "work"),
-        cusum_value_col="speed",
-        cusum_target=50.0,
-        cusum_slack=1.0,
-        cusum_threshold=5.0,
-        **kw,
+        stages=[CusumGate("speed", 50.0, slack=1.0, threshold=5.0, **kw)],
     )
 
 
-def test_construction_requires_both_halves(spark, tmp_path):
-    with pytest.raises(ValueError, match="cusum"):
-        ActivePipeline(
-            spark=spark,
-            registry=_reg(),
-            work_dir=str(tmp_path / "w0"),
-            cusum_value_col="speed",
-        )
+def _scores(pipe):
+    return pipe.stage_output(pipe.stages[0])
+
+
+def test_construction_requires_both_halves():
+    with pytest.raises(TypeError, match="target"):
+        CusumGate("speed")
 
 
 @pytest.mark.slow
@@ -75,18 +71,18 @@ def test_stable_stream_quiet_planted_shift_alarms(spark, tmp_path):
     # 4 on-target batches (mean 50): the slack absorbs noise, no alarm
     for b in range(4):
         pipe.process_batch(_batch(spark, b, mean=50), b)
-    scores = pipe.cusum_scores().orderBy("batch").collect()
+    scores = _scores(pipe).orderBy("batch").collect()
     assert all(not r["alarm"] for r in scores)
     # small persistent +3 shift: each batch adds ~(3 - slack) = 2 to
     # s_pos; alarm (threshold 5) within 3 shifted batches
     for b in range(4, 8):
         pipe.process_batch(_batch(spark, b, mean=53), b)
-    last = pipe.cusum_scores().filter(F.col("batch") == 7).collect()[0]
+    last = _scores(pipe).filter(F.col("batch") == 7).collect()[0]
     assert last["s_pos"] > 5.0 and last["alarm"]
     # the walk accumulated monotonically through the shift
     s = [
         r["s_pos"]
-        for r in pipe.cusum_scores().filter(F.col("batch") >= 4).orderBy("batch").collect()
+        for r in _scores(pipe).filter(F.col("batch") >= 4).orderBy("batch").collect()
     ]
     assert s == sorted(s)
 
@@ -96,26 +92,26 @@ def test_replay_is_idempotent(spark, tmp_path):
     for b in range(3):
         pipe.process_batch(_batch(spark, b, mean=55), b)
     before = sorted(
-        tuple(r) for r in pipe.cusum_scores().filter(F.col("batch") == 2).collect()
+        tuple(r) for r in _scores(pipe).filter(F.col("batch") == 2).collect()
     )
     # foreachBatch re-delivers the LATEST batch after a crash
     pipe.process_batch(_batch(spark, 2, mean=55), 2)
     after = sorted(
-        tuple(r) for r in pipe.cusum_scores().filter(F.col("batch") == 2).collect()
+        tuple(r) for r in _scores(pipe).filter(F.col("batch") == 2).collect()
     )
     assert before == after
 
 
 def test_groups_and_quiet_slice_carries_state(spark, tmp_path):
-    pipe = _pipe(spark, tmp_path, cusum_group_cols=["carId"])
+    pipe = _pipe(spark, tmp_path, group_cols=["carId"])
     pipe.process_batch(_batch(spark, 0, mean=54), 0)
     # batch 1 contains ONLY carId 0 (still shifted)
     only0 = _batch(spark, 1, mean=54).filter(F.col("carId") == 0)
     pipe.process_batch(only0, 1)
-    b1 = {r["carId"]: r for r in pipe.cusum_scores().filter(F.col("batch") == 1).collect()}
+    b1 = {r["carId"]: r for r in _scores(pipe).filter(F.col("batch") == 1).collect()}
     assert set(b1) == {0, 1, 2, 3, 4}
     # carId 0 advanced; the quiet slices carried batch-0 state forward
-    b0 = {r["carId"]: r for r in pipe.cusum_scores().filter(F.col("batch") == 0).collect()}
+    b0 = {r["carId"]: r for r in _scores(pipe).filter(F.col("batch") == 0).collect()}
     assert b1[0]["s_pos"] > b0[0]["s_pos"]
     for k in (1, 2, 3, 4):
         assert b1[k]["s_pos"] == b0[k]["s_pos"] and b1[k]["batch_rows"] == 0
@@ -124,16 +120,15 @@ def test_groups_and_quiet_slice_carries_state(spark, tmp_path):
 @pytest.mark.slow
 def test_state_janitor_keeps_recent_only(spark, tmp_path):
     pipe = _pipe(spark, tmp_path)
-    for b in range(pipe.CUSUM_STATE_RETAIN + 4):
+    retain = CusumGate.STATE_RETAIN
+    for b in range(retain + 4):
         pipe.process_batch(_batch(spark, b, mean=50, n=40), b)
     kept = sorted(
         int(d.split("=")[1])
-        for d in os.listdir(pipe.cusum_state_path)
+        for d in os.listdir(os.path.join(pipe.work_dir, "cusum_state"))
         if d.startswith("batch=")
     )
-    assert min(kept) >= pipe.CUSUM_STATE_RETAIN + 3 - pipe.CUSUM_STATE_RETAIN
-    assert max(kept) == pipe.CUSUM_STATE_RETAIN + 3
+    assert min(kept) >= retain + 3 - retain
+    assert max(kept) == retain + 3
     # scores for ALL batches remain readable
-    assert pipe.cusum_scores().select("batch").distinct().count() == (
-        pipe.CUSUM_STATE_RETAIN + 4
-    )
+    assert _scores(pipe).select("batch").distinct().count() == retain + 4

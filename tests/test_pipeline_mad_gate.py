@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from activedatawarehouseprototype_spark.streaming.pipeline import ActivePipeline
 from activedatawarehouseprototype_spark.streaming.registry import RuleRegistry
+from activedatawarehouseprototype_spark.streaming.stages import MadGate
 
 
 def _reg():
@@ -57,26 +58,19 @@ def _pipe(spark, tmp_path, **kw):
         spark=spark,
         registry=_reg(),
         work_dir=str(tmp_path / "work"),
-        mad_value_col="speed",
-        mad_center=50.0,
-        mad_scale=1.0,
-        mad_z=3.0,
-        mad_max_outlier_frac=0.05,
-        **kw,
+        stages=[MadGate("speed", 50.0, 1.0, z=3.0, max_outlier_frac=0.05, **kw)],
     )
 
 
-def test_construction_requires_full_trio_and_positive_scale(spark, tmp_path):
-    with pytest.raises(ValueError, match="MAD gate"):
-        ActivePipeline(
-            spark=spark, registry=_reg(), work_dir=str(tmp_path / "w0"),
-            mad_value_col="speed", mad_center=50.0,
-        )
-    with pytest.raises(ValueError, match="mad_scale"):
-        ActivePipeline(
-            spark=spark, registry=_reg(), work_dir=str(tmp_path / "w1"),
-            mad_value_col="speed", mad_center=50.0, mad_scale=0.0,
-        )
+def _scores(pipe):
+    return pipe.stage_output(pipe.stages[0])
+
+
+def test_construction_requires_full_trio_and_positive_scale():
+    with pytest.raises(TypeError, match="scale"):
+        MadGate("speed", 50.0)
+    with pytest.raises(ValueError, match="MAD scale"):
+        MadGate("speed", 50.0, 0.0)
 
 
 def test_burst_alarms_while_mean_stays_put(spark, tmp_path):
@@ -87,7 +81,7 @@ def test_burst_alarms_while_mean_stays_put(spark, tmp_path):
     m = burst.agg(F.avg("speed")).collect()[0][0]
     assert abs(m - 50.0) < 3.0
     pipe.process_batch(burst, 1)
-    scores = {r["batch"]: r for r in pipe.mad_scores().collect()}
+    scores = {r["batch"]: r for r in _scores(pipe).collect()}
     assert scores[0]["alarm"] is False
     assert scores[0]["n_outliers"] == 0
     assert scores[1]["alarm"] is True
@@ -98,18 +92,18 @@ def test_replay_is_idempotent(spark, tmp_path):
     pipe = _pipe(spark, tmp_path)
     b = _batch(spark, 0, outlier_every=20)
     pipe.process_batch(b, 0)
-    first = sorted(map(tuple, pipe.mad_scores().collect()))
+    first = sorted(map(tuple, _scores(pipe).collect()))
     pipe.process_batch(b, 0)  # foreachBatch redelivery
-    assert sorted(map(tuple, pipe.mad_scores().collect())) == first
+    assert sorted(map(tuple, _scores(pipe).collect())) == first
 
 
 def test_per_slice_scoring(spark, tmp_path):
-    pipe = _pipe(spark, tmp_path, mad_group_cols=["carId"])
+    pipe = _pipe(spark, tmp_path, group_cols=["carId"])
     base = dt.datetime(2024, 1, 1)
     rows = [(0, base, 50.0), (0, base, 51.0), (1, base, 250.0), (1, base, 49.0)]
     pipe.process_batch(
         spark.createDataFrame(rows, "carId int, ts timestamp, speed double"), 0
     )
-    by_car = {r["carId"]: r for r in pipe.mad_scores().collect()}
+    by_car = {r["carId"]: r for r in _scores(pipe).collect()}
     assert by_car[0]["alarm"] is False
     assert by_car[1]["alarm"] is True and by_car[1]["n_outliers"] == 1

@@ -14,9 +14,12 @@ from pyspark.sql import functions as F
 
 from activedatawarehouseprototype_spark.rules.compiler import evaluate_rule
 from activedatawarehouseprototype_spark.rules.model import Rule, RuleState
+from activedatawarehouseprototype_spark.sources.rule_source import DirectoryRuleSource
+from activedatawarehouseprototype_spark.streaming import stages
 from activedatawarehouseprototype_spark.streaming.eca import parse_composite_key
 from activedatawarehouseprototype_spark.streaming.pipeline import ActivePipeline
 from activedatawarehouseprototype_spark.streaming.registry import RuleRegistry
+from activedatawarehouseprototype_spark.streaming.stages import AnomalyStage, SummaryMV
 
 BASE = dt.datetime(2024, 1, 1, 12, 0, 0)
 
@@ -332,7 +335,7 @@ def test_rules_dir_midstream_registration(spark, tmp_path):
         spark=spark,
         registry=reg,
         work_dir=str(tmp_path / "wk"),
-        rules_dir=str(rules_dir),
+        rule_source=DirectoryRuleSource(str(rules_dir)),
     )
     # batch 0: no rules yet
     pipe.process_batch(car_df(spark, [(9, 1, 130.0)]), 0)
@@ -1330,7 +1333,7 @@ def test_clear_state_all_stop_stops_stream(spark, tmp_path):
         spark=spark,
         registry=reg,
         work_dir=str(tmp_path / "wk"),
-        rules_dir=str(rules_dir),
+        rule_source=DirectoryRuleSource(str(rules_dir)),
     )
     stream = spark.readStream.schema("carId int, ts timestamp, speed double")\
         .option("maxFilesPerTrigger", 1).parquet(str(events_dir) + "/*")
@@ -1603,7 +1606,7 @@ def test_pipeline_ooo_soak_exactly_once_and_complete(spark, tmp_path):
 
 
 def test_pipeline_maintains_summary_mv(spark, tmp_path):
-    """With mv_key_cols/mv_value_col set, each batch merges into the
+    """With a SummaryMV stage, each batch merges into the
     persisted per-key summary; replaying a batch id is a no-op."""
     from pyspark.sql import functions as F
 
@@ -1613,14 +1616,13 @@ def test_pipeline_maintains_summary_mv(spark, tmp_path):
         spark=spark,
         registry=reg,
         work_dir=str(tmp_path / "wk"),
-        mv_key_cols=["carId"],
-        mv_value_col="speed",
+        stages=[SummaryMV(["carId"], "speed")],
     )
     b0 = car_df(spark, [(1, 0, 100.0), (2, 1, 50.0), (1, 2, 120.0)])
     b1 = car_df(spark, [(1, 10, 80.0), (3, 11, 60.0)])
     pipe.process_batch(b0, 0)
     pipe.process_batch(b1, 1)
-    mv = {r.carId: (r.n, r.total, r.mn, r.mx) for r in pipe.summary_mv().collect()}
+    mv = {r.carId: (r.n, r.total, r.mn, r.mx) for r in pipe.stage_output(pipe.stages[0]).collect()}
     assert mv == {
         1: (3, 300.0, 80.0, 120.0),
         2: (1, 50.0, 50.0, 50.0),
@@ -1628,7 +1630,7 @@ def test_pipeline_maintains_summary_mv(spark, tmp_path):
     }
     # replay of batch 1 (foreachBatch at-least-once) must not double-count
     pipe.process_batch(b1, 1)
-    mv2 = {r.carId: (r.n, r.total, r.mn, r.mx) for r in pipe.summary_mv().collect()}
+    mv2 = {r.carId: (r.n, r.total, r.mn, r.mx) for r in pipe.stage_output(pipe.stages[0]).collect()}
     assert mv2 == mv
 
 
@@ -1699,10 +1701,10 @@ def test_pipeline_mv_histogram_percentiles(spark, tmp_path):
     from activedatawarehouseprototype_spark.streaming.registry import RuleRegistry
 
     reg = RuleRegistry()
+    mv_stage = SummaryMV(["carId"], "speed", hist_bins=(0.0, 200.0, 20))
     pipe = ActivePipeline(
         spark=spark, registry=reg, work_dir=str(tmp_path / "wk"),
-        ts_col="ts", mv_key_cols=["carId"], mv_value_col="speed",
-        mv_hist_bins=(0.0, 200.0, 20),
+        ts_col="ts", stages=[mv_stage],
     )
     all_speeds = []
     for b in range(2):
@@ -1710,14 +1712,14 @@ def test_pipeline_mv_histogram_percentiles(spark, tmp_path):
                 for i in range(50)]
         all_speeds += [v for _, _, v in rows]
         pipe.process_batch(car_df(spark, rows), b)
-    mv = spark.read.parquet(pipe.summary_mv_path)
+    mv = spark.read.parquet(str(tmp_path / "wk" / "summary_mv"))
     row = mv.filter("carId = 1").collect()[0]
     assert sum(row["hist"]) == 100
     est = estimate_percentile(list(row["hist"]), 0.5, 0.0, 200.0)
     true = float(np.percentile(all_speeds, 50))
     assert abs(est - true) <= 10.0 + 1e-9  # one bin width
-    # the pipeline-level reader returns the same estimate
-    assert pipe.summary_percentile({"carId": 1}, 0.5) == est
+    # the stage's reader returns the same estimate
+    assert mv_stage.percentile(pipe, {"carId": 1}, 0.5) == est
 
 
 def test_pipeline_ingest_quality_gate(spark, tmp_path):
@@ -2022,9 +2024,9 @@ def test_pipeline_hot_key_salted_grouped_soak(spark, tmp_path, monkeypatch):
     captured = {}
     orig = P.evaluate_rules_grouped
 
-    def spy(buffer, rules, ts_col="ts", salt_buckets=None):
+    def spy(buffer, rules, ts_col="ts", salt_buckets=None, **kw):
         captured["salt"] = salt_buckets
-        out = orig(buffer, rules, ts_col=ts_col, salt_buckets=salt_buckets)
+        out = orig(buffer, rules, ts_col=ts_col, salt_buckets=salt_buckets, **kw)
         captured["plan"] = out._jdf.queryExecution().toString()
         return out
 
@@ -2201,30 +2203,35 @@ def test_pipeline_rolling_zscore_anomaly_stage(spark, tmp_path):
         spark=spark,
         registry=reg,
         work_dir=str(tmp_path / "wk"),
-        anomaly_key_cols=["carId"],
-        anomaly_value_col="speed",
-        anomaly_bucket_ms=3_600_000,
-        anomaly_lookback=7,
-        anomaly_min_periods=3,
-        anomaly_threshold=3.0,
+        stages=[
+            AnomalyStage(
+                ["carId"],
+                "speed",
+                bucket_ms=3_600_000,
+                lookback=7,
+                min_periods=3,
+                threshold=3.0,
+            )
+        ],
     )
+    history = str(tmp_path / "wk" / "anomaly_history")
     HOUR = 3600
     # batches 0-3: four flat hourly buckets for cars 1 and 2
     for b in range(4):
         rows = [(1, b * HOUR, 50.0 + b), (2, b * HOUR, 50.0 - b)]
         pipe.process_batch(car_df(spark, rows), b)
-    assert pipe.anomalies().count() == 0  # flat history: nothing flags
+    assert pipe.stage_output(pipe.stages[-1]).count() == 0  # flat history: nothing flags
 
     # batch 4: car 1 spikes 40x; car 2 stays flat
     pipe.process_batch(
         car_df(spark, [(1, 4 * HOUR, 2000.0), (2, 4 * HOUR, 50.0)]), 4
     )
-    got = pipe.anomalies().collect()
+    got = pipe.stage_output(pipe.stages[-1]).collect()
     assert {r.carId for r in got} == {1}
     assert len(got) == 1 and abs(got[0].zscore) > 3.0
     # the flagged bucket is the newest one (buckets are absolute epoch ms)
     newest = (
-        spark.read.parquet(pipe.anomaly_history_path)
+        spark.read.parquet(history)
         .agg(F.max("bucket_ms"))
         .collect()[0][0]
     )
@@ -2234,8 +2241,8 @@ def test_pipeline_rolling_zscore_anomaly_stage(spark, tmp_path):
     pipe.process_batch(
         car_df(spark, [(1, 4 * HOUR, 2000.0), (2, 4 * HOUR, 50.0)]), 4
     )
-    assert pipe.anomalies().count() == 1
-    hist = spark.read.parquet(pipe.anomaly_history_path)
+    assert pipe.stage_output(pipe.stages[-1]).count() == 1
+    hist = spark.read.parquet(history)
     # 5 buckets x 2 cars, exactly once despite the replay
     assert hist.count() == 10
     # history totals are per-(key, bucket) sums of the batch partials
@@ -2260,31 +2267,24 @@ def test_anomaly_stage_survives_restart_and_validates_config(spark, tmp_path):
             spark=spark,
             registry=reg,
             work_dir=str(tmp_path / "wk"),
-            anomaly_key_cols=["carId"],
-            anomaly_value_col="speed",
-            anomaly_min_periods=3,
+            stages=[AnomalyStage(["carId"], "speed", min_periods=3)],
         )
 
     HOUR = 3600
     p1 = mk()
     for b in range(4):
         p1.process_batch(car_df(spark, [(1, b * HOUR, 50.0 + b)]), b)
-    assert p1.anomalies().count() == 0
+    assert p1.stage_output(p1.stages[0]).count() == 0
 
     # restart: new pipeline object, same work_dir — the spike batch
     # must still see the four pre-restart baseline buckets
     p2 = mk()
     p2.process_batch(car_df(spark, [(1, 4 * HOUR, 2000.0)]), 4)
-    got = p2.anomalies().collect()
+    got = p2.stage_output(p2.stages[0]).collect()
     assert len(got) == 1 and got[0].carId == 1
 
-    with _pytest.raises(ValueError, match="anomaly"):
-        ActivePipeline(
-            spark=spark,
-            registry=RuleRegistry(persist_path=str(tmp_path / "r2.jsonl")),
-            work_dir=str(tmp_path / "wk2"),
-            anomaly_key_cols=["carId"],  # value col missing
-        )
+    with _pytest.raises(TypeError, match="value_col"):
+        AnomalyStage(["carId"])  # value col missing
 
 
 def test_widened_window_reupsert_refloors_coverage_gate(spark, pipeline):
@@ -2443,17 +2443,17 @@ def test_pipeline_all_features_soak_with_restart(spark, tmp_path):
             reg.apply_json(json.dumps(rule))
         return ActivePipeline(
             spark=spark, registry=reg, work_dir=work,
-            mv_key_cols=["carId"], mv_value_col="speed",
-            mv_hist_bins=(0.0, 200.0, 10),
+            stages=[
+                SummaryMV(["carId"], "speed", hist_bins=(0.0, 200.0, 10)),
+                AnomalyStage(["carId"], "speed", bucket_ms=10_000, lookback=7,
+                             min_periods=3, threshold=3.0),
+            ],
             alert_cooldown_ms=60_000,
             ingest_constraints=[
                 Constraint("speed_range", "in_range", column="speed",
                            lo=0.0, hi=200.0),
             ],
             enrich_on="key",
-            anomaly_key_cols=["carId"], anomaly_value_col="speed",
-            anomaly_bucket_ms=10_000, anomaly_lookback=7,
-            anomaly_min_periods=3, anomaly_threshold=3.0,
             salt_buckets=4,
         )
 
@@ -2484,7 +2484,7 @@ def test_pipeline_all_features_soak_with_restart(spark, tmp_path):
     for b in range(4, 8):
         pipe.process_batch(car_df(spark, batches[b]), b)
 
-    mv_before = sorted(map(tuple, pipe.summary_mv().collect()))
+    mv_before = sorted(map(tuple, pipe.stage_output(pipe.stages[0]).collect()))
     n_enriched = pipe.enriched().count()
     n_alerts = pipe.alerts().count()
     pipe.process_batch(car_df(spark, batches[7]), 7)  # at-least-once replay
@@ -2511,14 +2511,14 @@ def test_pipeline_all_features_soak_with_restart(spark, tmp_path):
 
     # 2) summary MV == per-key recompute over admitted rows; histogram
     # mass == n; the replay changed nothing
-    assert sorted(map(tuple, pipe.summary_mv().collect())) == mv_before
+    assert sorted(map(tuple, pipe.stage_output(pipe.stages[0]).collect())) == mv_before
     stats = {}
     for c, _, v in admitted:
         n, tot, mn, mx = stats.get(c, (0, 0.0, float("inf"), float("-inf")))
         stats[c] = (n + 1, tot + v, min(mn, v), max(mx, v))
-    mv = {r.carId: (r.n, r.total, r.mn, r.mx) for r in pipe.summary_mv().collect()}
+    mv = {r.carId: (r.n, r.total, r.mn, r.mx) for r in pipe.stage_output(pipe.stages[0]).collect()}
     assert mv == stats
-    hist = spark.read.parquet(pipe.summary_mv_path)
+    hist = spark.read.parquet(f"{work}/summary_mv")
     for r in hist.collect():
         assert sum(r["hist"]) == stats[r["carId"]][0]
 
@@ -2541,7 +2541,7 @@ def test_pipeline_all_features_soak_with_restart(spark, tmp_path):
     assert upd == {"fleetX"}
 
     # 5) anomaly stage: ONLY car 3's planted spike flags
-    an = pipe.anomalies().collect()
+    an = pipe.stage_output(pipe.stages[-1]).collect()
     assert {r.carId for r in an} == {3} and abs(an[0].zscore) > 3.0
 
     # 6) cooldown: every window fires (AVG > 0), but each car emits at
@@ -2558,8 +2558,10 @@ def test_pipeline_all_features_soak_with_restart(spark, tmp_path):
     assert sum(per_key.values()) < fired  # suppression really happened
 
 
-def test_anomaly_history_compaction_bounded_and_equivalent(spark, tmp_path):
-    """ANOMALY_COMPACT_EVERY folds strictly-older history partials into
+def test_anomaly_history_compaction_bounded_and_equivalent(
+    spark, tmp_path, monkeypatch
+):
+    """HISTORY_FOLD_EVERY folds strictly-older history partials into
     the batch=-1 base: directory count stays bounded, scoring totals
     unchanged, latest-batch replay still an idempotent overwrite."""
     import os as _os2
@@ -2569,14 +2571,19 @@ def test_anomaly_history_compaction_bounded_and_equivalent(spark, tmp_path):
         spark=spark,
         registry=reg,
         work_dir=str(tmp_path / "wk"),
-        anomaly_key_cols=["carId"],
-        anomaly_value_col="speed",
-        anomaly_bucket_ms=3_600_000,
-        anomaly_lookback=3,
-        anomaly_min_periods=2,
-        anomaly_threshold=3.0,
+        stages=[
+            AnomalyStage(
+                ["carId"],
+                "speed",
+                bucket_ms=3_600_000,
+                lookback=3,
+                min_periods=2,
+                threshold=3.0,
+            )
+        ],
     )
-    pipe.ANOMALY_COMPACT_EVERY = 2
+    monkeypatch.setattr(stages, "HISTORY_FOLD_EVERY", 2)
+    history = str(tmp_path / "wk" / "anomaly_history")
     HOUR = 3600
     # slightly varying totals: a zero-variance baseline z-scores NULL
     # by design, which would make the spike assertion vacuous
@@ -2588,13 +2595,13 @@ def test_anomaly_history_compaction_bounded_and_equivalent(spark, tmp_path):
         )
     dirs = sorted(
         d
-        for d in _os2.listdir(pipe.anomaly_history_path)
+        for d in _os2.listdir(history)
         if d.startswith("batch=")
     )
     assert dirs == ["batch=-1", "batch=2"]
     # totals preserved: 3 hourly buckets (98/100/102) for car 1
     hist = (
-        spark.read.parquet(pipe.anomaly_history_path)
+        spark.read.parquet(history)
         .groupBy("carId", "bucket_ms")
         .sum("x")
         .collect()
@@ -2605,7 +2612,7 @@ def test_anomaly_history_compaction_bounded_and_equivalent(spark, tmp_path):
         car_df(spark, [(1, 2 * HOUR, 51.0), (1, 2 * HOUR + 1, 51.0)]), 2
     )
     hist2 = (
-        spark.read.parquet(pipe.anomaly_history_path)
+        spark.read.parquet(history)
         .groupBy("carId", "bucket_ms")
         .sum("x")
         .collect()
@@ -2615,7 +2622,7 @@ def test_anomaly_history_compaction_bounded_and_equivalent(spark, tmp_path):
     pipe.process_batch(
         car_df(spark, [(1, 3 * HOUR + i, 200.0) for i in range(10)]), 3
     )
-    anoms = pipe.anomalies().collect()
+    anoms = pipe.stage_output(pipe.stages[-1]).collect()
     assert any(r["carId"] == 1 and r["zscore"] > 3 for r in anoms)
 
 
