@@ -26,29 +26,116 @@ minhash modes); ``decontaminate`` writes the benchmark-contamination
 pairs table; ``sample`` writes deterministic hash-based
 train/val/test split assignments. This mirrors the reference's
 operational surface (Kafka topic + file sources) on files, plus the
-curation operators.
+curation operators. ``--help`` lists every verb.
+
+Every flag is checked before the Spark session starts, so a usage
+error costs no JVM start: argparse rejects a missing or malformed flag
+with exit status 2, and ``run`` exits with a message naming the
+missing flags when a stage gets only part of its required ones. A
+verb that writes a parquet output reports the row count of what it
+wrote, read back, so its plan runs once.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from activedatawarehouseprototype_spark import session
+from activedatawarehouseprototype_spark.catalog import load_parquet
+from activedatawarehouseprototype_spark.operators import (
+    abtest, basket, clustering, dedup, dedup_index, drift, fuzzy, graph, pca,
+    quality, quantile_mv, regression, retrieval, robust, sampling, similarity,
+    sketch_mv, skipping, text, text_index, timeseries, versioned, warehouse,
+)
+from activedatawarehouseprototype_spark.rules.compiler import evaluate_rule
+from activedatawarehouseprototype_spark.rules.model import Rule
+from activedatawarehouseprototype_spark.rules.sql_gen import rule_to_sql
+from activedatawarehouseprototype_spark.sources.rule_source import DirectoryRuleSource
+from activedatawarehouseprototype_spark.streaming.ingest import DedupIngest
+from activedatawarehouseprototype_spark.streaming.pipeline import ActivePipeline
+from activedatawarehouseprototype_spark.streaming.registry import RuleRegistry
+from activedatawarehouseprototype_spark.streaming.stages import (
+    AnomalyStage, CusumGate, DriftGate, MadGate, SummaryMV,
+)
+
+
+def _csv(spec: str) -> list[str]:
+    """Comma-separated names; empty items are dropped."""
+    return [v for v in spec.split(",") if v]
+
+
+def _weights(spec: str) -> dict[str, float]:
+    """``name=w,...`` split weights."""
+    try:
+        return {name: float(w) for name, w in (p.split("=") for p in spec.split(","))}
+    except ValueError:
+        raise argparse.ArgumentTypeError(
+            f"expects name=weight,... with numeric weights — got {spec!r}"
+        ) from None
+
+
+def _keys(spec: str) -> list:
+    """Comma-separated key values, typed as the column: integers parse
+    as int, the rest stay strings."""
+
+    def typed(v: str):
+        try:
+            return int(v)
+        except ValueError:
+            return v
+
+    return [typed(v) for v in _csv(spec)]
+
+
+def _bins(spec: str) -> tuple[float, float, int]:
+    """``lo,hi,bins`` fixed histogram edges, checked here so a malformed
+    value fails at the command line, not as an unpacking error deep
+    inside the first micro-batch."""
+    try:
+        lo, hi, n = spec.split(",")
+        return (float(lo), float(hi), int(n))
+    except ValueError:
+        raise argparse.ArgumentTypeError(
+            f"expects lo,hi,bins with lo,hi numeric and bins integer — got {spec!r}"
+        ) from None
 
 
 def _build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="adw-spark")
+    p.set_defaults(spark=True)
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    pe = sub.add_parser("eval", help="batch-evaluate one rule over parquet events")
+    # flag specs many verbs share with the same default and help
+    inp = argparse.ArgumentParser(add_help=False)
+    inp.add_argument("--input", required=True, help="input parquet path")
+    out = argparse.ArgumentParser(add_help=False)
+    out.add_argument("--output", required=True, help="output parquet path")
+    doc = argparse.ArgumentParser(add_help=False)
+    doc.add_argument("--id-col", default="doc_id")
+    doc.add_argument("--text-col", default="text")
+    vec = argparse.ArgumentParser(add_help=False)
+    vec.add_argument("--id-col", default="vec_id")
+    vec.add_argument("--vec-col", default="embedding")
+    ts = argparse.ArgumentParser(add_help=False)
+    ts.add_argument("--ts-col", default="ts")
+
+    pe = sub.add_parser(
+        "eval", parents=[ts], help="batch-evaluate one rule over parquet events"
+    )
     pe.add_argument("--rule", required=True, help="path to rule JSON file")
     pe.add_argument("--events", required=True, help="events parquet path")
-    pe.add_argument("--ts-col", default="ts")
     pe.add_argument("--fired-only", action="store_true")
     pe.add_argument("--limit", type=int, default=20, help="rows to print")
 
     pr = sub.add_parser(
         "run",
+        parents=[ts],
         help="run the active pipeline over a stream",
         description="Each micro-batch polls --rules-dir, buffers the "
         "events, evaluates every active rule over the buffer, writes "
@@ -61,7 +148,6 @@ def _build_parser() -> argparse.ArgumentParser:
     pr.add_argument("--events-dir", required=True, help="streaming parquet dir")
     pr.add_argument("--rules-dir", required=True, help="watched rule-JSON dir")
     pr.add_argument("--work-dir", required=True)
-    pr.add_argument("--ts-col", default="ts")
     pr.add_argument(
         "--once", action="store_true", help="availableNow trigger (drain + exit)"
     )
@@ -71,7 +157,7 @@ def _build_parser() -> argparse.ArgumentParser:
         "(durable across restarts)",
     )
     pr.add_argument(
-        "--mv-key", default=None,
+        "--mv-key", type=_csv, default=None,
         help="comma-separated key columns: maintain an incremental "
         "per-key summary MV at <work-dir>/summary_mv",
     )
@@ -79,12 +165,12 @@ def _build_parser() -> argparse.ArgumentParser:
         "--mv-value", default=None, help="value column for the summary MV"
     )
     pr.add_argument(
-        "--mv-hist", default=None,
+        "--mv-hist", type=_bins, default=None,
         help="lo,hi,bins — add a mergeable histogram column to the "
         "summary MV (approximate percentiles)",
     )
     pr.add_argument(
-        "--anomaly-key", default=None,
+        "--anomaly-key", type=_csv, default=None,
         help="comma-separated key columns: flag per-key values whose "
         "bucket total deviates from the key's own trailing baseline "
         "(rolling z-score) at <work-dir>/anomalies",
@@ -103,7 +189,7 @@ def _build_parser() -> argparse.ArgumentParser:
         "(PSI vs all prior batches; scores at <work-dir>/drift)",
     )
     pr.add_argument(
-        "--drift-bins", default=None,
+        "--drift-bins", type=_bins, default=None,
         help="lo,hi,bins fixed histogram edges for the drift gate "
         "(required with --drift-value)",
     )
@@ -155,18 +241,19 @@ def _build_parser() -> argparse.ArgumentParser:
         "(default 0.05)",
     )
 
-    ps = sub.add_parser("sql", help="print the rule's generated ANSI-SQL twin")
+    ps = sub.add_parser(
+        "sql", parents=[ts], help="print the rule's generated ANSI-SQL twin"
+    )
+    ps.set_defaults(spark=False)
     ps.add_argument("--rule", required=True)
     ps.add_argument("--table", default="events")
-    ps.add_argument("--ts-col", default="ts")
-    ps.add_argument("--numeric-cols", default="", help="comma-separated")
+    ps.add_argument("--numeric-cols", type=_csv, default="", help="comma-separated")
     ps.add_argument("--fired-only", action="store_true")
 
-    pd_ = sub.add_parser("dedup", help="write near-dup clusters for a corpus")
+    pd_ = sub.add_parser(
+        "dedup", parents=[out, doc], help="write near-dup clusters for a corpus"
+    )
     pd_.add_argument("--input", required=True, help="documents parquet path")
-    pd_.add_argument("--output", required=True, help="output parquet path")
-    pd_.add_argument("--id-col", default="doc_id")
-    pd_.add_argument("--text-col", default="text")
     pd_.add_argument("--mode", choices=["exact", "minhash"], default="minhash")
     pd_.add_argument("--k", type=int, default=12, help="minhash functions")
     pd_.add_argument("--bands", type=int, default=3)
@@ -179,13 +266,11 @@ def _build_parser() -> argparse.ArgumentParser:
 
     pc = sub.add_parser(
         "decontaminate",
+        parents=[out, doc],
         help="flag training docs containing a benchmark doc's n-grams",
     )
     pc.add_argument("--train", required=True, help="training-docs parquet path")
     pc.add_argument("--bench", required=True, help="benchmark-docs parquet path")
-    pc.add_argument("--output", required=True, help="output parquet path")
-    pc.add_argument("--id-col", default="doc_id")
-    pc.add_argument("--text-col", default="text")
     pc.add_argument("--n", type=int, default=5, help="n-gram size")
     pc.add_argument("--threshold", type=float, default=0.5,
                     help="min fraction of bench n-grams contained")
@@ -194,6 +279,7 @@ def _build_parser() -> argparse.ArgumentParser:
 
     phn = sub.add_parser(
         "mine-hard-negatives",
+        parents=[out, vec],
         help="per-query ANN hard negatives minus labeled positives "
         "(optional positive-floor false-negative guard)",
     )
@@ -203,53 +289,50 @@ def _build_parser() -> argparse.ArgumentParser:
                      help="queries parquet (qid + qvec)")
     phn.add_argument("--positives", required=True,
                      help="labeled positives parquet (qid + id)")
-    phn.add_argument("--output", required=True)
     phn.add_argument("--k", type=int, default=5)
     phn.add_argument("--n-centroids", type=int, default=16)
     phn.add_argument("--probes", type=int, default=2)
-    phn.add_argument("--id-col", default="vec_id")
-    phn.add_argument("--vec-col", default="embedding")
     phn.add_argument("--qid-col", default="qid")
     phn.add_argument("--qvec-col", default="qvec")
     phn.add_argument("--guard-positive-floor", action="store_true")
     phn.add_argument("--overfetch", type=int, default=None)
 
     pm = sub.add_parser(
-        "sample", help="write deterministic train/val/test split assignments"
+        "sample",
+        parents=[out],
+        help="write deterministic train/val/test split assignments",
     )
     pm.add_argument("--input", required=True, help="parquet path")
-    pm.add_argument("--output", required=True, help="output parquet path")
-    pm.add_argument("--key", required=True, help="comma-separated key columns")
-    pm.add_argument("--weights", default="train=0.8,val=0.1,test=0.1")
+    pm.add_argument("--key", type=_csv, required=True,
+                    help="comma-separated key columns")
+    pm.add_argument("--weights", type=_weights, default="train=0.8,val=0.1,test=0.1")
     pm.add_argument("--salt", default="s1")
 
     pq = sub.add_parser(
         "score",
+        parents=[out, doc],
         help="per-document quality signals: heuristics + unigram-LM "
         "cross-entropy + keep/drop reason",
     )
     pq.add_argument("--input", required=True, help="documents parquet path")
-    pq.add_argument("--output", required=True, help="output parquet path")
-    pq.add_argument("--id-col", default="doc_id")
-    pq.add_argument("--text-col", default="text")
     pq.add_argument("--alpha", type=float, default=0.5,
                     help="LM add-alpha smoothing")
 
     pib = sub.add_parser(
         "index-build",
+        parents=[vec],
         help="build a persisted IVF ANN index (vectors partitioned by cell)",
     )
     pib.add_argument("--input", required=True, help="embeddings parquet path")
     pib.add_argument("--index", required=True, help="index output directory")
     pib.add_argument("--k", type=int, default=16, help="number of cells")
     pib.add_argument("--iters", type=int, default=4, help="k-means iterations")
-    pib.add_argument("--id-col", default="vec_id")
-    pib.add_argument("--vec-col", default="embedding")
-    pib.add_argument(
+    trainer = pib.add_mutually_exclusive_group()
+    trainer.add_argument(
         "--seed-only", action="store_true",
         help="deterministic lowest-id seed centroids (skip k-means)",
     )
-    pib.add_argument(
+    trainer.add_argument(
         "--lattice", action="store_true",
         help="train with the bit-reproducible integer-lattice k-means "
         "(clustering.kmeans_lattice) instead of the float trainer",
@@ -257,11 +340,11 @@ def _build_parser() -> argparse.ArgumentParser:
 
     pis = sub.add_parser(
         "index-search",
+        parents=[out],
         help="batch top-k ANN search against a persisted IVF index",
     )
     pis.add_argument("--index", required=True, help="index directory")
     pis.add_argument("--queries", required=True, help="queries parquet path")
-    pis.add_argument("--output", required=True, help="output parquet path")
     pis.add_argument("--k", type=int, default=5)
     pis.add_argument("--probes", type=int, default=2)
     pis.add_argument("--id-col", default="vec_id")
@@ -272,6 +355,7 @@ def _build_parser() -> argparse.ArgumentParser:
 
     ppb = sub.add_parser(
         "pq-index-build",
+        parents=[vec],
         help="build a persisted fused IVF+PQ ANN index "
         "(cell partitions x residual PQ codes)",
     )
@@ -281,8 +365,6 @@ def _build_parser() -> argparse.ArgumentParser:
     ppb.add_argument("--iters", type=int, default=4, help="k-means iterations")
     ppb.add_argument("--m", type=int, default=8, help="PQ sub-quantizers")
     ppb.add_argument("--ksub", type=int, default=16, help="codes per sub-quantizer")
-    ppb.add_argument("--id-col", default="vec_id")
-    ppb.add_argument("--vec-col", default="embedding")
     ppb.add_argument(
         "--seed-only", action="store_true",
         help="deterministic lowest-id seed centroids (skip k-means)",
@@ -290,12 +372,12 @@ def _build_parser() -> argparse.ArgumentParser:
 
     pps = sub.add_parser(
         "pq-index-search",
+        parents=[out],
         help="batch top-k ANN search against a fused IVF+PQ index "
         "(prune -> codes-only ADC shortlist -> exact re-rank)",
     )
     pps.add_argument("--index", required=True, help="index directory")
     pps.add_argument("--queries", required=True, help="queries parquet path")
-    pps.add_argument("--output", required=True, help="output parquet path")
     pps.add_argument("--k", type=int, default=5)
     pps.add_argument("--probes", type=int, default=2)
     pps.add_argument("--shortlist", type=int, default=None,
@@ -313,23 +395,21 @@ def _build_parser() -> argparse.ArgumentParser:
 
     ppa = sub.add_parser(
         "pq-index-append",
+        parents=[vec],
         help="append a batch to a fused IVF+PQ index (existing "
         "centroids + codebooks; no retraining)",
     )
     ppa.add_argument("--input", required=True, help="embeddings parquet path")
     ppa.add_argument("--index", required=True, help="index directory")
-    ppa.add_argument("--id-col", default="vec_id")
-    ppa.add_argument("--vec-col", default="embedding")
 
     pdb = sub.add_parser(
         "dedup-index-build",
+        parents=[doc],
         help="persist a MinHash-LSH dedup index (bucket-partitioned "
         "band signatures + hot-shingle list)",
     )
     pdb.add_argument("--input", required=True, help="documents parquet path")
     pdb.add_argument("--index", required=True, help="index output directory")
-    pdb.add_argument("--id-col", default="doc_id")
-    pdb.add_argument("--text-col", default="text")
     pdb.add_argument("--n", type=int, default=5, help="shingle n-gram size")
     pdb.add_argument("--k", type=int, default=12, help="minhash functions")
     pdb.add_argument("--bands", type=int, default=3)
@@ -338,14 +418,12 @@ def _build_parser() -> argparse.ArgumentParser:
 
     pdl = sub.add_parser(
         "dedup-index-lookup",
+        parents=[out, doc],
         help="match a new batch against a persisted dedup index "
         "(writes (id_new, id_indexed) pairs; --append adds survivors)",
     )
     pdl.add_argument("--index", required=True, help="index directory")
     pdl.add_argument("--batch", required=True, help="new-batch parquet path")
-    pdl.add_argument("--output", required=True, help="output parquet path")
-    pdl.add_argument("--id-col", default="doc_id")
-    pdl.add_argument("--text-col", default="text")
     pdl.add_argument(
         "--append", action="store_true",
         help="after the lookup, append the batch's UNMATCHED docs to "
@@ -354,13 +432,12 @@ def _build_parser() -> argparse.ArgumentParser:
 
     prs = sub.add_parser(
         "resample",
+        parents=[out, ts],
         help="regularize an irregular per-key series onto a fixed grid "
         "with forward fill",
     )
     prs.add_argument("--input", required=True, help="events parquet path")
-    prs.add_argument("--output", required=True, help="output parquet path")
     prs.add_argument("--key", default="user_id")
-    prs.add_argument("--ts-col", default="ts")
     prs.add_argument("--value-col", default="value")
     prs.add_argument("--step-ms", type=int, default=86_400_000)
     prs.add_argument("--tie-col", default=None,
@@ -371,19 +448,29 @@ def _build_parser() -> argparse.ArgumentParser:
         help="versioned-table operations (Delta-style time travel on parquet)",
     )
     pt.add_argument("--path", required=True, help="versioned table directory")
-    pt.add_argument(
-        "action",
-        choices=["commit", "read", "history", "rollback", "vacuum", "optimize"],
+    act = pt.add_subparsers(dest="action", required=True)
+    pcm = act.add_parser("commit", help="commit a parquet as the next version")
+    pcm.add_argument("--input", required=True, help="parquet to commit")
+    pcm.add_argument("--mode", choices=["append", "overwrite"], default="append")
+    prd = act.add_parser("read", parents=[out], help="write one version to --output")
+    prd.add_argument("--version", type=int, default=None,
+                     help="version to read (default: the latest)")
+    act.add_parser("history", help="print the commit log as JSON lines")
+    prb = act.add_parser(
+        "rollback", help="re-point the table at an old version as a new commit"
     )
-    pt.add_argument("--input", help="parquet to commit (action=commit)")
-    pt.add_argument("--mode", choices=["append", "overwrite"], default="append")
-    pt.add_argument("--version", type=int, default=None,
-                    help="read/rollback target version")
-    pt.add_argument("--output", help="parquet destination (action=read)")
-    pt.add_argument("--retain-last", type=int, default=1,
-                    help="versions kept by vacuum")
-    pt.add_argument("--n-files", type=int, default=8,
-                    help="target file count for optimize")
+    prb.add_argument("--version", type=int, required=True,
+                     help="rollback target version")
+    pvc = act.add_parser(
+        "vacuum", help="drop old versions and the data dirs only they reference"
+    )
+    pvc.add_argument("--retain-last", type=int, default=1,
+                     help="versions kept by vacuum")
+    pop = act.add_parser(
+        "optimize", help="compact the current version as a new commit"
+    )
+    pop.add_argument("--n-files", type=int, default=8,
+                     help="target file count for optimize")
 
     pck = sub.add_parser(
         "check",
@@ -403,6 +490,7 @@ def _build_parser() -> argparse.ArgumentParser:
 
     pin = sub.add_parser(
         "ingest",
+        parents=[doc],
         help="dedup-at-the-door ingestion: drain a parquet directory "
         "into a clean store through a persisted dedup index",
     )
@@ -411,8 +499,6 @@ def _build_parser() -> argparse.ArgumentParser:
     pin.add_argument("--index", required=True,
                      help="dedup index (from dedup-index-build)")
     pin.add_argument("--store", required=True, help="clean-store directory")
-    pin.add_argument("--id-col", default="doc_id")
-    pin.add_argument("--text-col", default="text")
     pin.add_argument("--max-files-per-trigger", type=int, default=None)
 
     pcomp = sub.add_parser(
@@ -429,20 +515,21 @@ def _build_parser() -> argparse.ArgumentParser:
 
     pdiff = sub.add_parser(
         "snapshot-diff",
+        parents=[out],
         help="classify keys across two table snapshots as "
         "added/removed/changed/unchanged",
     )
     pdiff.add_argument("--old", required=True, help="old snapshot parquet")
     pdiff.add_argument("--new", required=True, help="new snapshot parquet")
-    pdiff.add_argument("--keys", required=True,
+    pdiff.add_argument("--keys", type=_csv, required=True,
                        help="comma-separated key columns")
-    pdiff.add_argument("--compare-cols", default=None,
+    pdiff.add_argument("--compare-cols", type=_csv, default=None,
                        help="comma-separated value columns "
                        "(default: all shared non-key columns)")
-    pdiff.add_argument("--output", required=True)
 
     ppr = sub.add_parser(
         "pagerank",
+        parents=[out],
         help="weighted PageRank over an edge table (fixed iterations)",
     )
     ppr.add_argument("--edges", required=True,
@@ -452,23 +539,23 @@ def _build_parser() -> argparse.ArgumentParser:
     ppr.add_argument("--weight-col", default=None)
     ppr.add_argument("--iters", type=int, default=3)
     ppr.add_argument("--damping", type=float, default=0.85)
-    ppr.add_argument("--output", required=True)
 
     pqc = sub.add_parser(
         "quota-cap",
+        parents=[inp, out],
         help="keep at most N rows per group by deterministic hash order",
     )
-    pqc.add_argument("--input", required=True)
-    pqc.add_argument("--group-cols", required=True,
+    pqc.add_argument("--group-cols", type=_csv, required=True,
                      help="comma-separated group columns")
-    pqc.add_argument("--key-cols", required=True,
+    pqc.add_argument("--key-cols", type=_csv, required=True,
                      help="comma-separated key columns (the hash seed)")
     pqc.add_argument("--max-per-group", type=int, required=True)
     pqc.add_argument("--salt", default="q1")
-    pqc.add_argument("--output", required=True)
 
     pbm = sub.add_parser(
-        "bm25", help="BM25 top-k document retrieval for ad-hoc queries"
+        "bm25",
+        parents=[out, doc],
+        help="BM25 top-k document retrieval for ad-hoc queries",
     )
     pbm.add_argument("--docs", required=True, help="documents parquet")
     pbm.add_argument(
@@ -476,32 +563,28 @@ def _build_parser() -> argparse.ArgumentParser:
         help="query string (repeat for a batch; ids are 1-based order)",
     )
     pbm.add_argument("--k", type=int, default=10)
-    pbm.add_argument("--id-col", default="doc_id")
-    pbm.add_argument("--text-col", default="text")
-    pbm.add_argument("--output", required=True)
 
     pew = sub.add_parser(
-        "ewma", help="per-key exponentially weighted moving average"
+        "ewma",
+        parents=[inp, out, ts],
+        help="per-key exponentially weighted moving average",
     )
-    pew.add_argument("--input", required=True)
     pew.add_argument("--key-col", required=True)
-    pew.add_argument("--ts-col", default="ts")
     pew.add_argument("--value-col", required=True)
     pew.add_argument("--alpha", type=float, default=0.25)
     pew.add_argument("--tie-col", default=None,
                      help="deterministic same-timestamp tiebreak column")
-    pew.add_argument("--output", required=True)
 
     phb = sub.add_parser(
         "hll-mv-build",
+        parents=[ts],
         help="build a mergeable per-bucket HLL distinct-count MV",
     )
     phb.add_argument("--events", required=True)
     phb.add_argument("--mv", required=True, help="MV output directory")
     phb.add_argument("--key-col", required=True)
-    phb.add_argument("--ts-col", default="ts")
     phb.add_argument("--bucket-ms", type=int, default=86_400_000)
-    phb.add_argument("--group-cols", default=None,
+    phb.add_argument("--group-cols", type=_csv, default=None,
                      help="comma-separated extra grouping columns")
     phb.add_argument("--lgk", type=int, default=12)
 
@@ -512,7 +595,7 @@ def _build_parser() -> argparse.ArgumentParser:
     phd.add_argument("--mv", required=True)
     phd.add_argument("--start-ms", type=int, default=None)
     phd.add_argument("--end-ms", type=int, default=None)
-    phd.add_argument("--group-cols", default=None)
+    phd.add_argument("--group-cols", type=_csv, default=None)
 
     pjv = sub.add_parser(
         "jmv-verify",
@@ -520,69 +603,68 @@ def _build_parser() -> argparse.ArgumentParser:
         "snapshots and multiset-diff against the stored MV",
     )
     pjv.add_argument("--base", required=True, help="incremental_join_mv dir")
-    pjv.add_argument("--on", required=True, help="comma-separated join keys")
+    pjv.add_argument("--on", type=_csv, required=True,
+                     help="comma-separated join keys")
     pjv.add_argument("--sample-fraction", type=float, default=None)
     pjv.add_argument("--salt", default="v1")
 
     ppca = sub.add_parser(
         "pca-project",
+        parents=[inp, out],
         help="fit a PCA over a vector column and append the projection",
     )
-    ppca.add_argument("--input", required=True)
     ppca.add_argument("--d", type=int, default=8)
     ppca.add_argument("--vec-col", default="embedding")
     ppca.add_argument("--out-col", default="pca")
     ppca.add_argument("--whiten", action="store_true")
-    ppca.add_argument("--output", required=True)
 
     pdr = sub.add_parser(
         "drift",
+        parents=[inp, out],
         help="PSI/KL distribution drift between two slices of a table",
     )
-    pdr.add_argument("--input", required=True)
     pdr.add_argument("--value-col", required=True)
     pdr.add_argument("--ref-where", required=True,
                      help="SQL predicate selecting the reference slice")
     pdr.add_argument("--cur-where", required=True,
                      help="SQL predicate selecting the current slice")
-    pdr.add_argument("--group-cols", default=None,
+    pdr.add_argument("--group-cols", type=_csv, default=None,
                      help="comma-separated slice columns (optional)")
     pdr.add_argument("--bins", type=int, default=10)
-    pdr.add_argument("--output", required=True)
 
     ptr = sub.add_parser(
         "triangles",
+        parents=[out],
         help="per-node triangle counts of an undirected edge table",
     )
     ptr.add_argument("--edges", required=True)
     ptr.add_argument("--src-col", default="src")
     ptr.add_argument("--dst-col", default="dst")
-    ptr.add_argument("--output", required=True)
 
     ptm = sub.add_parser(
         "temperature-mix",
+        parents=[inp, out],
         help="re-balance sources with n^tau temperature sampling",
     )
-    ptm.add_argument("--input", required=True)
     ptm.add_argument("--source-col", required=True)
-    ptm.add_argument("--key-cols", required=True,
+    ptm.add_argument("--key-cols", type=_csv, required=True,
                      help="comma-separated identity columns for the hash coin")
     ptm.add_argument("--tau", type=float, default=0.7)
     ptm.add_argument("--target-rows", type=int, default=None)
     ptm.add_argument("--salt", default="tm1")
-    ptm.add_argument("--output", required=True)
 
     pbx = sub.add_parser(
-        "text-index-build", help="build the persisted BM25 inverted index"
+        "text-index-build",
+        parents=[doc],
+        help="build the persisted BM25 inverted index",
     )
     pbx.add_argument("--docs", required=True, help="documents parquet")
     pbx.add_argument("--index", required=True, help="index directory")
     pbx.add_argument("--n-buckets", type=int, default=64)
-    pbx.add_argument("--id-col", default="doc_id")
-    pbx.add_argument("--text-col", default="text")
 
     pbq = sub.add_parser(
         "text-index-search",
+        parents=[out],
         help="BM25 top-k via the persisted index (bucket-pruned read)",
     )
     pbq.add_argument("--index", required=True)
@@ -591,39 +673,38 @@ def _build_parser() -> argparse.ArgumentParser:
         help="query string (repeat for a batch; ids are 1-based order)",
     )
     pbq.add_argument("--k", type=int, default=10)
-    pbq.add_argument("--output", required=True)
 
     pcs = sub.add_parser(
-        "cusum", help="per-key CUSUM change-point statistics"
+        "cusum",
+        parents=[inp, out, ts],
+        help="per-key CUSUM change-point statistics",
     )
-    pcs.add_argument("--input", required=True)
     pcs.add_argument("--key-col", required=True)
-    pcs.add_argument("--ts-col", default="ts")
     pcs.add_argument("--value-col", required=True)
     pcs.add_argument("--target", type=float, required=True)
     pcs.add_argument("--slack", type=float, default=0.0)
     pcs.add_argument("--tie-col", default=None)
-    pcs.add_argument("--output", required=True)
 
     pbd = sub.add_parser(
         "balanced-sample",
+        parents=[inp, out],
         help="downsample every class to the smallest class's size",
     )
-    pbd.add_argument("--input", required=True)
-    pbd.add_argument("--class-cols", required=True, help="comma-separated")
-    pbd.add_argument("--key-cols", required=True, help="comma-separated")
+    pbd.add_argument("--class-cols", type=_csv, required=True,
+                     help="comma-separated")
+    pbd.add_argument("--key-cols", type=_csv, required=True,
+                     help="comma-separated")
     pbd.add_argument("--salt", default="b1")
-    pbd.add_argument("--output", required=True)
 
     pfp = sub.add_parser(
-        "frequent-pairs", help="co-occurring item pairs by support"
+        "frequent-pairs",
+        parents=[inp, out],
+        help="co-occurring item pairs by support",
     )
-    pfp.add_argument("--input", required=True)
     pfp.add_argument("--basket-col", required=True)
     pfp.add_argument("--item-col", required=True)
     pfp.add_argument("--min-support", type=int, default=1)
     pfp.add_argument("--max-basket-items", type=int, default=None)
-    pfp.add_argument("--output", required=True)
 
     pcf = sub.add_parser(
         "compact-small",
@@ -634,21 +715,18 @@ def _build_parser() -> argparse.ArgumentParser:
 
     pkm = sub.add_parser(
         "kmeans",
+        parents=[inp, out, vec],
         help="bit-reproducible integer-lattice k-means assignments",
     )
-    pkm.add_argument("--input", required=True)
-    pkm.add_argument("--id-col", default="vec_id")
-    pkm.add_argument("--vec-col", default="embedding")
     pkm.add_argument("--k", type=int, default=16)
     pkm.add_argument("--iters", type=int, default=4)
     pkm.add_argument("--scale", type=int, default=10_000)
-    pkm.add_argument("--output", required=True)
 
     pfm = sub.add_parser(
         "fuzzy-match",
+        parents=[inp, out],
         help="levenshtein pairs inside a block key (+ optional keeper dedup)",
     )
-    pfm.add_argument("--input", required=True)
     pfm.add_argument("--block-col", required=True)
     pfm.add_argument("--id-col", required=True)
     pfm.add_argument("--text-col", required=True)
@@ -660,37 +738,36 @@ def _build_parser() -> argparse.ArgumentParser:
         help="write the deduped rows (lowest id per match group) "
         "instead of the pair list",
     )
-    pfm.add_argument("--output", required=True)
 
     pmo = sub.add_parser(
         "outliers",
+        parents=[inp, out],
         help="per-group median/MAD robust outlier stats",
     )
-    pmo.add_argument("--input", required=True)
-    pmo.add_argument("--group-cols", required=True, help="comma-separated")
+    pmo.add_argument("--group-cols", type=_csv, required=True,
+                     help="comma-separated")
     pmo.add_argument("--value-col", required=True)
     pmo.add_argument("--z", type=float, default=3.0)
-    pmo.add_argument("--output", required=True)
 
     pot = sub.add_parser(
         "ols-trend",
+        parents=[inp, out],
         help="per-group closed-form OLS trend (exact sum components)",
     )
-    pot.add_argument("--input", required=True)
-    pot.add_argument("--group-cols", required=True, help="comma-separated")
+    pot.add_argument("--group-cols", type=_csv, required=True,
+                     help="comma-separated")
     pot.add_argument("--x-col", required=True)
     pot.add_argument("--y-col", required=True)
     pot.add_argument("--no-rebase-x", action="store_true")
-    pot.add_argument("--output", required=True)
 
     pqb = sub.add_parser(
         "quantile-mv-build",
+        parents=[ts],
         help="per-bucket exact quantile-ladder MV over a value column",
     )
     pqb.add_argument("--events", required=True)
     pqb.add_argument("--mv", required=True)
     pqb.add_argument("--value-col", required=True)
-    pqb.add_argument("--ts-col", default="ts")
     pqb.add_argument("--bucket-ms", type=int, default=86_400_000)
     pqb.add_argument("--bins", type=int, default=64)
 
@@ -710,7 +787,7 @@ def _build_parser() -> argparse.ArgumentParser:
     ppk.add_argument("--path", required=True)
     ppk.add_argument("--key-col", required=True)
     ppk.add_argument(
-        "--keys", required=True,
+        "--keys", type=_keys, required=True,
         help="comma-separated key values (typed as the column: "
         "integers parse as int, the rest stay strings)",
     )
@@ -721,64 +798,57 @@ def _build_parser() -> argparse.ArgumentParser:
 
     pcl = sub.add_parser(
         "collocations",
+        parents=[inp, out, doc],
         help="top-k adjacent-word collocations by PMI",
     )
-    pcl.add_argument("--input", required=True)
-    pcl.add_argument("--id-col", default="doc_id")
-    pcl.add_argument("--text-col", default="text")
     pcl.add_argument("--min-count", type=int, default=5)
     pcl.add_argument("--k", type=int, default=20)
-    pcl.add_argument("--output", required=True)
 
-    pss = sub.add_parser(
+    psp = sub.add_parser(
         "split-safe",
+        parents=[inp, out, doc],
         help="leakage-safe train/val/test split: coin tossed per "
         "near-dup cluster (minhash LSH pairs, transitively closed)",
     )
-    pss.add_argument("--input", required=True)
-    pss.add_argument("--id-col", default="doc_id")
-    pss.add_argument("--text-col", default="text")
-    pss.add_argument("--salt", default="s1")
-    pss.add_argument("--output", required=True)
+    psp.add_argument("--salt", default="s1")
 
     ptx = sub.add_parser(
         "transitions",
+        parents=[out, ts],
         help="first-order Markov transition matrix over per-key "
         "event sequences",
     )
     ptx.add_argument("--events", required=True)
     ptx.add_argument("--key-col", default="user_id")
-    ptx.add_argument("--ts-col", default="ts")
     ptx.add_argument("--state-col", default="event_type")
     ptx.add_argument("--tie-col", default="event_id")
-    ptx.add_argument("--output", required=True)
 
     pab = sub.add_parser(
         "ab-test",
+        parents=[out],
         help="two-proportion z-test per group over unit rows "
         "(arm + converted columns)",
     )
     pab.add_argument("--units", required=True, help="unit-rows parquet")
-    pab.add_argument("--group-cols", required=True,
+    pab.add_argument("--group-cols", type=_csv, required=True,
                      help="comma-separated group columns")
     pab.add_argument("--arm-col", default="arm")
     pab.add_argument("--converted-col", default="converted")
-    pab.add_argument("--output", required=True)
 
     pcg = sub.add_parser(
         "classify",
+        parents=[inp, out],
         help="hash-trick linear classifier gate (fastText-style "
         "inference; md5-derived demo weights)",
     )
-    pcg.add_argument("--input", required=True)
     pcg.add_argument("--text-col", default="text")
     pcg.add_argument("--n-buckets", type=int, default=4096)
     pcg.add_argument("--salt", default="clf1")
     pcg.add_argument("--no-bigrams", action="store_true")
-    pcg.add_argument("--output", required=True)
 
     pcu = sub.add_parser(
         "cuped",
+        parents=[out],
         help="CUPED components: exact per-arm moment sums + pooled "
         "theta_num/theta_den over unit rows",
     )
@@ -786,10 +856,10 @@ def _build_parser() -> argparse.ArgumentParser:
     pcu.add_argument("--arm-col", default="arm")
     pcu.add_argument("--x-col", default="x_pre")
     pcu.add_argument("--y-col", default="y")
-    pcu.add_argument("--output", required=True)
 
     pkc = sub.add_parser(
         "kcore",
+        parents=[out],
         help="k-core membership (node, in-core degree) of an edge table",
     )
     pkc.add_argument("--edges", required=True, help="edge parquet")
@@ -797,20 +867,18 @@ def _build_parser() -> argparse.ArgumentParser:
     pkc.add_argument("--src-col", default="src")
     pkc.add_argument("--dst-col", default="dst")
     pkc.add_argument("--max-iter", type=int, default=20)
-    pkc.add_argument("--output", required=True)
 
     ptp = sub.add_parser(
         "train-probe",
+        parents=[inp, out],
         help="exact closed-form ridge probe training (2 integer "
         "features + intercept); writes one row of milli-weights + "
         "moment sums, optionally the scored input",
     )
-    ptp.add_argument("--input", required=True)
     ptp.add_argument("--x1-col", required=True)
     ptp.add_argument("--x2-col", required=True)
     ptp.add_argument("--y-col", required=True, help="integer label (e.g. +1/-1)")
     ptp.add_argument("--lam", type=int, default=1000)
-    ptp.add_argument("--output", required=True)
     ptp.add_argument(
         "--scored-output", default=None,
         help="also write input + score_milli + keep (the deployed gate)",
@@ -818,13 +886,11 @@ def _build_parser() -> argparse.ArgumentParser:
 
     pss = sub.add_parser(
         "substr-spans",
+        parents=[inp, out, doc],
         help="alignment-free exact-substring duplicate spans "
         "(Lee-et-al ExactSubstr shape): maximal word spans whose "
         "n-grams repeat in the corpus",
     )
-    pss.add_argument("--input", required=True)
-    pss.add_argument("--id-col", default="doc_id")
-    pss.add_argument("--text-col", default="text")
     pss.add_argument("--ngram-words", type=int, default=50)
     pss.add_argument("--min-count", type=int, default=2)
     pss.add_argument(
@@ -832,7 +898,6 @@ def _build_parser() -> argparse.ArgumentParser:
         help="shuffle/join on xxhash64(gram) instead of gram text "
         "(the 100 TB setting)",
     )
-    pss.add_argument("--output", required=True)
     pss.add_argument(
         "--cut-output", default=None,
         help="also write the REWRITTEN corpus (id, n_words, "
@@ -858,25 +923,6 @@ def _build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def _parse_mv_hist(spec: str | None, flag: str = "--mv-hist"):
-    """lo,hi,bins — validated HERE so a malformed value fails at the
-    command line, not as an unpacking error deep inside the first
-    micro-batch. ``flag`` names the offending option in the error."""
-    if not spec:
-        return None
-    parts = spec.split(",")
-    if len(parts) != 3:
-        raise SystemExit(
-            f"{flag} expects exactly lo,hi,bins — got {spec!r}"
-        )
-    try:
-        return (float(parts[0]), float(parts[1]), int(parts[2]))
-    except ValueError:
-        raise SystemExit(
-            f"{flag} expects lo,hi numeric and bins integer — got {spec!r}"
-        ) from None
-
-
 def _all_or_none(flags: dict) -> bool:
     """True when every one of a stage's required ``{flag: value}`` is
     given, False when none is; a subset fails at the command line."""
@@ -889,24 +935,17 @@ def _all_or_none(flags: dict) -> bool:
 
 def _run_stages(args) -> list:
     """The optional pipeline stages the ``run`` flags ask for."""
-    from activedatawarehouseprototype_spark.streaming.stages import (
-        AnomalyStage,
-        CusumGate,
-        DriftGate,
-        MadGate,
-        SummaryMV,
-    )
-
     stages = []
     if _all_or_none({"--mv-key": args.mv_key, "--mv-value": args.mv_value}):
-        hist = _parse_mv_hist(args.mv_hist)
-        stages.append(SummaryMV(args.mv_key.split(","), args.mv_value, hist))
+        stages.append(SummaryMV(args.mv_key, args.mv_value, args.mv_hist))
     if _all_or_none({"--anomaly-key": args.anomaly_key, "--anomaly-value": args.anomaly_value}):
-        keys = args.anomaly_key.split(",")
-        stages.append(AnomalyStage(keys, args.anomaly_value, threshold=args.anomaly_threshold))
+        stages.append(
+            AnomalyStage(args.anomaly_key, args.anomaly_value, threshold=args.anomaly_threshold)
+        )
     if _all_or_none({"--drift-value": args.drift_value, "--drift-bins": args.drift_bins}):
-        bins = _parse_mv_hist(args.drift_bins, flag="--drift-bins")
-        stages.append(DriftGate(args.drift_value, bins, threshold=args.drift_threshold))
+        stages.append(
+            DriftGate(args.drift_value, args.drift_bins, threshold=args.drift_threshold)
+        )
     if _all_or_none({"--cusum-value": args.cusum_value, "--cusum-target": args.cusum_target}):
         stages.append(
             CusumGate(
@@ -934,13 +973,28 @@ def _run_stages(args) -> list:
     return stages
 
 
+def _write(out: DataFrame, path: str, what: str | None = None) -> DataFrame:
+    """Overwrite ``path`` with ``out`` and return what was written, read
+    back: a count or summary of ``out`` itself would execute its whole
+    plan a second time. The read takes ``out``'s schema, which spares
+    the schema-inference job. With ``what``, report
+    ``<rows> <what> -> <path>`` on stderr."""
+    out.write.mode("overwrite").parquet(path)
+    written = out.sparkSession.read.schema(out.schema).parquet(path)
+    if what is not None:
+        print(f"{written.count()} {what} -> {path}", file=sys.stderr)
+    return written
+
+
 def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
+    # the one flag check argparse cannot state; it exits before Spark
+    stages = _run_stages(args) if args.cmd == "run" else None
+    if args.spark:
+        spark = session.get_spark(app_name=f"adw-{args.cmd}")
+        spark.sparkContext.setLogLevel("ERROR")
 
     if args.cmd == "sql":
-        from activedatawarehouseprototype_spark.rules.model import Rule
-        from activedatawarehouseprototype_spark.rules.sql_gen import rule_to_sql
-
         with open(args.rule) as f:
             rule = Rule.from_json(f.read())
         print(
@@ -948,42 +1002,23 @@ def main(argv: list[str] | None = None) -> int:
                 rule,
                 table=args.table,
                 ts_col=args.ts_col,
-                numeric_cols=set(filter(None, args.numeric_cols.split(","))),
+                numeric_cols=set(args.numeric_cols),
                 fired_only=args.fired_only,
             )
         )
-        return 0
 
-    # flag errors surface before the JVM starts
-    stages = _run_stages(args) if args.cmd == "run" else None
-
-    from activedatawarehouseprototype_spark.session import get_spark
-
-    spark = get_spark(app_name=f"adw-{args.cmd}")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    if args.cmd == "eval":
-        from activedatawarehouseprototype_spark.rules.compiler import evaluate_rule
-        from activedatawarehouseprototype_spark.rules.model import Rule
-
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-
+    elif args.cmd == "eval":
         with open(args.rule) as f:
             rule = Rule.from_json(f.read())
         events = load_parquet(spark, args.events)
+        # show and count both read the one checkpointed execution
         out = evaluate_rule(
             events, rule, ts_col=args.ts_col, fired_only=args.fired_only
-        )
+        ).localCheckpoint()
         out.show(args.limit, truncate=False)
         print(f"{out.count()} rows", file=sys.stderr)
-        return 0
 
-    if args.cmd == "dedup":
-        from pyspark.sql import functions as F
-
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators import dedup, text
-
+    elif args.cmd == "dedup":
         docs = load_parquet(spark, args.input)
         if args.mode == "exact":
             # same (id, component) cluster schema as minhash mode: the
@@ -1018,14 +1053,9 @@ def main(argv: list[str] | None = None) -> int:
                 F.col("id").alias(args.id_col),
                 F.col("comp").alias("component"),
             )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} rows -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "rows")
 
-    if args.cmd == "decontaminate":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators import dedup
-
+    elif args.cmd == "decontaminate":
         out = dedup.contamination_pairs(
             load_parquet(spark, args.train),
             load_parquet(spark, args.bench),
@@ -1035,14 +1065,9 @@ def main(argv: list[str] | None = None) -> int:
             threshold=args.threshold,
             max_doc_freq=args.max_doc_freq,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} contaminated pairs -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "contaminated pairs")
 
-    if args.cmd == "mine-hard-negatives":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators import similarity
-
+    elif args.cmd == "mine-hard-negatives":
         out = similarity.mine_hard_negatives(
             load_parquet(spark, args.corpus),
             load_parquet(spark, args.queries),
@@ -1057,36 +1082,19 @@ def main(argv: list[str] | None = None) -> int:
             guard_positive_floor=args.guard_positive_floor,
             overfetch=args.overfetch,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} negatives -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "negatives")
 
-    if args.cmd == "sample":
-        from pyspark.sql import functions as F
-
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators import sampling
-
-        weights = {}
-        for part in args.weights.split(","):
-            name, w = part.split("=")
-            weights[name] = float(w)
+    elif args.cmd == "sample":
         df = load_parquet(spark, args.input)
         out = df.withColumn(
             "split",
-            sampling.assign_split(args.key.split(","), weights, salt=args.salt),
+            sampling.assign_split(args.key, args.weights, salt=args.salt),
         )
-        out.write.mode("overwrite").parquet(args.output)
-        counts = {r.split: r["count"] for r in out.groupBy("split").count().collect()}
+        written = _write(out, args.output)
+        counts = {r.split: r["count"] for r in written.groupBy("split").count().collect()}
         print(json.dumps(counts), file=sys.stderr)
-        return 0
 
-    if args.cmd == "score":
-        from pyspark.sql import functions as F
-
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators import text
-
+    elif args.cmd == "score":
         docs = load_parquet(spark, args.input)
         t = F.col(args.text_col)
         lm = text.unigram_logprobs(
@@ -1114,28 +1122,18 @@ def main(argv: list[str] | None = None) -> int:
                 "left",
             )
         )
-        out.write.mode("overwrite").parquet(args.output)
-        n_drop = out.filter(F.col("drop_reason").isNotNull()).count()
+        written = _write(out, args.output)
+        n_drop = written.filter(F.col("drop_reason").isNotNull()).count()
         print(
-            f"{out.count()} docs scored ({n_drop} flagged) -> {args.output}",
+            f"{written.count()} docs scored ({n_drop} flagged) -> {args.output}",
             file=sys.stderr,
         )
-        return 0
 
-    if args.cmd == "index-build":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators import similarity
-
+    elif args.cmd == "index-build":
         vecs = load_parquet(spark, args.input)
         trained = None
         if args.lattice:
-            if args.seed_only:
-                raise SystemExit("--lattice and --seed-only are exclusive")
-            from activedatawarehouseprototype_spark.operators.clustering import (
-                kmeans_lattice,
-            )
-
-            _, lat = kmeans_lattice(
+            _, lat = clustering.kmeans_lattice(
                 vecs,
                 k=args.k,
                 iters=args.iters,
@@ -1156,14 +1154,8 @@ def main(argv: list[str] | None = None) -> int:
             centroids=trained,
         )
         print(f"{len(cents)} cells -> {args.index}", file=sys.stderr)
-        return 0
 
-    if args.cmd == "index-search":
-        from pyspark.sql import functions as F
-
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators import similarity
-
+    elif args.cmd == "index-search":
         queries = load_parquet(spark, args.queries).select(
             F.col(args.qid_col).alias("qid"),
             F.col(args.qvec_col).alias("qvec"),
@@ -1176,14 +1168,9 @@ def main(argv: list[str] | None = None) -> int:
             probes=args.probes,
             id_col=args.id_col,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} result rows -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "result rows")
 
-    if args.cmd == "pq-index-build":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators import similarity
-
+    elif args.cmd == "pq-index-build":
         similarity.ivf_pq_index_build(
             load_parquet(spark, args.input),
             args.index,
@@ -1196,14 +1183,8 @@ def main(argv: list[str] | None = None) -> int:
             use_kmeans=not args.seed_only,
         )
         print(f"{args.k} cells x {args.m} codes -> {args.index}", file=sys.stderr)
-        return 0
 
-    if args.cmd == "pq-index-search":
-        from pyspark.sql import functions as F
-
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators import similarity
-
+    elif args.cmd == "pq-index-search":
         queries = load_parquet(spark, args.queries).select(
             F.col(args.qid_col).alias("qid"),
             F.col(args.qvec_col).alias("qvec"),
@@ -1218,14 +1199,9 @@ def main(argv: list[str] | None = None) -> int:
             id_col=args.id_col,
             exclude_self=not args.include_self,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} result rows -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "result rows")
 
-    if args.cmd == "pq-index-append":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators import similarity
-
+    elif args.cmd == "pq-index-append":
         similarity.ivf_pq_index_append(
             spark,
             args.index,
@@ -1234,12 +1210,8 @@ def main(argv: list[str] | None = None) -> int:
             vec_col=args.vec_col,
         )
         print(f"appended -> {args.index}", file=sys.stderr)
-        return 0
 
-    if args.cmd == "dedup-index-build":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators import dedup_index
-
+    elif args.cmd == "dedup-index-build":
         dedup_index.dedup_index_build(
             load_parquet(spark, args.input),
             args.index,
@@ -1252,22 +1224,18 @@ def main(argv: list[str] | None = None) -> int:
         )
         n_rows = spark.read.parquet(f"{args.index}/bands").count()
         print(f"{n_rows} band rows -> {args.index}", file=sys.stderr)
-        return 0
 
-    if args.cmd == "dedup-index-lookup":
-        from pyspark.sql import functions as F
-
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators import dedup_index
-
+    elif args.cmd == "dedup-index-lookup":
         batch = load_parquet(spark, args.batch)
         out = dedup_index.dedup_index_lookup(
             spark, args.index, batch, id_col=args.id_col, text_col=args.text_col
-        ).localCheckpoint()  # 3 consumers (write/count/anti-join): run the band join once
-        out.write.mode("overwrite").parquet(args.output)
-        n_pairs = out.count()
+        )
+        # the count and the survivors' anti-join read the written pairs,
+        # so the band join runs once and before the append changes the index
+        pairs = _write(out, args.output)
+        n_pairs = pairs.count()
         if args.append:
-            matched = out.select(
+            matched = pairs.select(
                 F.col("id_new").alias(args.id_col)
             ).distinct()
             survivors = batch.join(matched, args.id_col, "left_anti")
@@ -1282,20 +1250,12 @@ def main(argv: list[str] | None = None) -> int:
             )
         else:
             print(f"{n_pairs} match pairs -> {args.output}", file=sys.stderr)
-        return 0
 
-    if args.cmd == "check":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.quality import (
-            Constraint,
-            check_constraints,
-            enforce,
-        )
-
+    elif args.cmd == "check":
         with open(args.constraints) as f:
             raw = json.load(f)
         cons = [
-            Constraint(
+            quality.Constraint(
                 name=c["name"],
                 kind=c["kind"],
                 column=c.get("column"),
@@ -1309,26 +1269,19 @@ def main(argv: list[str] | None = None) -> int:
             for c in raw
         ]
         df = load_parquet(spark, args.input)
-        report = check_constraints(df, cons).collect()
+        report = quality.check_constraints(df, cons).collect()
         for r in report:
             print(json.dumps(
                 {"constraint": r["constraint"], "kind": r["kind"],
                  "violations": r["violations"], "passed": r["passed"]}
             ))
         if args.quarantine:
-            _, bad = enforce(df, cons)
-            bad.write.mode("overwrite").parquet(args.quarantine)
-            print(f"{bad.count()} violating rows -> {args.quarantine}",
-                  file=sys.stderr)
+            _, bad = quality.enforce(df, cons)
+            _write(bad, args.quarantine, "violating rows")
         if args.strict and any(not r["passed"] for r in report):
             return 1
-        return 0
 
-    if args.cmd == "ingest":
-        from activedatawarehouseprototype_spark.streaming.ingest import (
-            DedupIngest,
-        )
-
+    elif args.cmd == "ingest":
         ing = DedupIngest(
             spark, args.index, args.store,
             id_col=args.id_col, text_col=args.text_col,
@@ -1342,51 +1295,29 @@ def main(argv: list[str] | None = None) -> int:
         q = ing.run_stream(reader.parquet(args.events_dir), available_now=True)
         q.awaitTermination()
         print(json.dumps(ing.metrics), file=sys.stderr)
-        return 0
 
-    if args.cmd == "index-compact":
+    elif args.cmd == "index-compact":
         if args.kind == "dedup":
-            from activedatawarehouseprototype_spark.operators import (
-                dedup_index,
-            )
-
             dedup_index.dedup_index_compact(
                 spark, args.index, files_per_bucket=args.files_per_partition
             )
         else:
-            from activedatawarehouseprototype_spark.operators import similarity
-
             similarity.ivf_index_compact(
                 spark, args.index, files_per_cell=args.files_per_partition
             )
         print(f"compacted {args.index}", file=sys.stderr)
-        return 0
 
-    if args.cmd == "table":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators import versioned as V
-
-        vt = V.VersionedTable(spark, args.path)
+    elif args.cmd == "table":
+        vt = versioned.VersionedTable(spark, args.path)
         if args.action == "commit":
-            if not args.input:
-                print("commit requires --input", file=sys.stderr)
-                return 2
             v = vt.commit(load_parquet(spark, args.input), mode=args.mode)
             print(f"committed version {v}", file=sys.stderr)
         elif args.action == "read":
-            if not args.output:
-                print("read requires --output", file=sys.stderr)
-                return 2
-            df = vt.read(version=args.version)
-            df.write.mode("overwrite").parquet(args.output)
-            print(f"{df.count()} rows -> {args.output}", file=sys.stderr)
+            _write(vt.read(version=args.version), args.output, "rows")
         elif args.action == "history":
             for h in vt.history():
                 print(json.dumps(h))
         elif args.action == "rollback":
-            if args.version is None:
-                print("rollback requires --version", file=sys.stderr)
-                return 2
             v = vt.rollback(args.version)
             print(f"rolled back to {args.version} as version {v}",
                   file=sys.stderr)
@@ -1394,17 +1325,11 @@ def main(argv: list[str] | None = None) -> int:
             removed = vt.vacuum(retain_last=args.retain_last)
             print(f"removed {len(removed)} commit dirs", file=sys.stderr)
         elif args.action == "optimize":
-            v = V.optimize(vt, n_files=args.n_files)
+            v = versioned.optimize(vt, n_files=args.n_files)
             print(f"compacted as version {v}", file=sys.stderr)
-        return 0
 
-    if args.cmd == "resample":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.timeseries import (
-            resample_ffill,
-        )
-
-        out = resample_ffill(
+    elif args.cmd == "resample":
+        out = timeseries.resample_ffill(
             load_parquet(spark, args.input),
             key_col=args.key,
             ts_col=args.ts_col,
@@ -1412,46 +1337,26 @@ def main(argv: list[str] | None = None) -> int:
             step_ms=args.step_ms,
             tie_col=args.tie_col,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} grid rows -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "grid rows")
 
-    if args.cmd == "snapshot-diff":
-        from pyspark.sql import functions as F
-
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.warehouse import (
-            snapshot_diff,
-        )
-
-        out = snapshot_diff(
+    elif args.cmd == "snapshot-diff":
+        out = warehouse.snapshot_diff(
             load_parquet(spark, args.old),
             load_parquet(spark, args.new),
-            key_cols=args.keys.split(","),
-            compare_cols=(
-                args.compare_cols.split(",") if args.compare_cols else None
-            ),
+            key_cols=args.keys,
+            compare_cols=args.compare_cols or None,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        # summarize from the WRITTEN parquet — re-running `out` would
-        # execute the full-outer join a second time
         summary = {
             r["op"]: r["n"]
-            for r in spark.read.parquet(args.output)
+            for r in _write(out, args.output)
             .groupBy("op")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
         print(json.dumps(summary), file=sys.stderr)
-        return 0
 
-    if args.cmd == "pagerank":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.graph import (
-            pagerank,
-        )
-
-        out = pagerank(
+    elif args.cmd == "pagerank":
+        out = graph.pagerank(
             load_parquet(spark, args.edges),
             damping=args.damping,
             iters=args.iters,
@@ -1459,102 +1364,58 @@ def main(argv: list[str] | None = None) -> int:
             dst=args.dst_col,
             weight=args.weight_col,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} node ranks -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "node ranks")
 
-    if args.cmd == "quota-cap":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.sampling import (
-            group_quota_cap,
-        )
-
-        out = group_quota_cap(
+    elif args.cmd == "quota-cap":
+        out = sampling.group_quota_cap(
             load_parquet(spark, args.input),
-            group_cols=args.group_cols.split(","),
-            key_cols=args.key_cols.split(","),
+            group_cols=args.group_cols,
+            key_cols=args.key_cols,
             max_per_group=args.max_per_group,
             salt=args.salt,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} rows kept -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "rows kept")
 
-    if args.cmd == "drift":
-        from pyspark.sql import functions as F
-
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.drift import (
-            psi_kl_drift,
-        )
-
-        out = psi_kl_drift(
+    elif args.cmd == "drift":
+        out = drift.psi_kl_drift(
             load_parquet(spark, args.input),
             F.expr(args.ref_where),
             F.expr(args.cur_where),
             args.value_col,
-            args.group_cols.split(",") if args.group_cols else None,
+            args.group_cols,
             bins=args.bins,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} drift rows -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "drift rows")
 
-    if args.cmd == "triangles":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.graph import (
-            triangle_counts,
-        )
-
-        out = triangle_counts(
+    elif args.cmd == "triangles":
+        out = graph.triangle_counts(
             load_parquet(spark, args.edges), src=args.src_col, dst=args.dst_col
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} node counts -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "node counts")
 
-    if args.cmd == "temperature-mix":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.sampling import (
-            temperature_mix_sample,
-        )
-
-        out = temperature_mix_sample(
+    elif args.cmd == "temperature-mix":
+        out = sampling.temperature_mix_sample(
             load_parquet(spark, args.input),
             args.source_col,
-            args.key_cols.split(","),
+            args.key_cols,
             tau=args.tau,
             target_rows=args.target_rows,
             salt=args.salt,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} rows kept -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "rows kept")
 
-    if args.cmd == "bm25":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.retrieval import (
-            bm25_topk,
-        )
-
-        out = bm25_topk(
+    elif args.cmd == "bm25":
+        out = retrieval.bm25_topk(
             load_parquet(spark, args.docs),
             [(i + 1, q) for i, q in enumerate(args.query)],
             k=args.k,
             id_col=args.id_col,
             text_col=args.text_col,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} result rows -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "result rows")
 
-    if args.cmd == "text-index-build":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.text_index import (
-            text_index_build,
-        )
-
-        text_index_build(
+    elif args.cmd == "text-index-build":
+        text_index.text_index_build(
             load_parquet(spark, args.docs),
             args.index,
             n_buckets=args.n_buckets,
@@ -1562,28 +1423,18 @@ def main(argv: list[str] | None = None) -> int:
             text_col=args.text_col,
         )
         print(f"index built -> {args.index}", file=sys.stderr)
-        return 0
 
-    if args.cmd == "text-index-search":
-        from activedatawarehouseprototype_spark.operators.text_index import (
-            text_index_search,
-        )
-
-        out = text_index_search(
+    elif args.cmd == "text-index-search":
+        out = text_index.text_index_search(
             spark,
             args.index,
             [(i + 1, q) for i, q in enumerate(args.query)],
             k=args.k,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} result rows -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "result rows")
 
-    if args.cmd == "cusum":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.timeseries import cusum
-
-        out = cusum(
+    elif args.cmd == "cusum":
+        out = timeseries.cusum(
             load_parquet(spark, args.input),
             args.key_col,
             args.ts_col,
@@ -1592,49 +1443,29 @@ def main(argv: list[str] | None = None) -> int:
             slack=args.slack,
             tie_col=args.tie_col,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} walk rows -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "walk rows")
 
-    if args.cmd == "balanced-sample":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.sampling import (
-            balanced_downsample,
-        )
-
-        out = balanced_downsample(
+    elif args.cmd == "balanced-sample":
+        out = sampling.balanced_downsample(
             load_parquet(spark, args.input),
-            args.class_cols.split(","),
-            args.key_cols.split(","),
+            args.class_cols,
+            args.key_cols,
             salt=args.salt,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} rows kept -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "rows kept")
 
-    if args.cmd == "frequent-pairs":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.basket import (
-            frequent_pairs,
-        )
-
-        out = frequent_pairs(
+    elif args.cmd == "frequent-pairs":
+        out = basket.frequent_pairs(
             load_parquet(spark, args.input),
             args.basket_col,
             args.item_col,
             min_support=args.min_support,
             max_basket_items=args.max_basket_items,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} pairs -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "pairs")
 
-    if args.cmd == "compact-small":
-        from activedatawarehouseprototype_spark.operators.warehouse import (
-            compact_small_files,
-        )
-
-        res = compact_small_files(
+    elif args.cmd == "compact-small":
+        res = warehouse.compact_small_files(
             spark, args.path, target_bytes=args.target_bytes
         )
         print(
@@ -1642,15 +1473,9 @@ def main(argv: list[str] | None = None) -> int:
             f"{res['output_files']} ({res['untouched']} untouched)",
             file=sys.stderr,
         )
-        return 0
 
-    if args.cmd == "kmeans":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.clustering import (
-            kmeans_lattice,
-        )
-
-        assigned, cents = kmeans_lattice(
+    elif args.cmd == "kmeans":
+        assigned, cents = clustering.kmeans_lattice(
             load_parquet(spark, args.input),
             k=args.k,
             iters=args.iters,
@@ -1658,10 +1483,9 @@ def main(argv: list[str] | None = None) -> int:
             vec_col=args.vec_col,
             scale=args.scale,
         )
-        assigned.write.mode("overwrite").parquet(args.output)
         sizes = {
             r["cluster_id"]: r["n"]
-            for r in assigned.groupBy("cluster_id").count()
+            for r in _write(assigned, args.output).groupBy("cluster_id").count()
             .withColumnRenamed("count", "n").collect()
         }
         print(
@@ -1669,17 +1493,10 @@ def main(argv: list[str] | None = None) -> int:
             f"{[sizes.get(cid, 0) for cid, _ in cents]} -> {args.output}",
             file=sys.stderr,
         )
-        return 0
 
-    if args.cmd == "fuzzy-match":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.fuzzy import (
-            fuzzy_dedup_keeper,
-            fuzzy_join_blocked,
-        )
-
+    elif args.cmd == "fuzzy-match":
         df = load_parquet(spark, args.input)
-        pairs = fuzzy_join_blocked(
+        pairs = fuzzy.fuzzy_join_blocked(
             df,
             block_col=args.block_col,
             id_col=args.id_col,
@@ -1688,55 +1505,33 @@ def main(argv: list[str] | None = None) -> int:
             max_block_rows=args.max_block_rows,
         )
         out = (
-            fuzzy_dedup_keeper(pairs, df, args.id_col)
+            fuzzy.fuzzy_dedup_keeper(pairs, df, args.id_col)
             if args.keep_survivors
             else pairs
         )
-        out.write.mode("overwrite").parquet(args.output)
-        what = "survivors" if args.keep_survivors else "pairs"
-        print(f"{out.count()} {what} -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "survivors" if args.keep_survivors else "pairs")
 
-    if args.cmd == "outliers":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.robust import (
-            mad_outlier_stats,
-        )
-
-        out = mad_outlier_stats(
+    elif args.cmd == "outliers":
+        out = robust.mad_outlier_stats(
             load_parquet(spark, args.input),
-            args.group_cols.split(","),
+            args.group_cols,
             args.value_col,
             z=args.z,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} groups -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "groups")
 
-    if args.cmd == "ols-trend":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.regression import (
-            grouped_ols,
-        )
-
-        out = grouped_ols(
+    elif args.cmd == "ols-trend":
+        out = regression.grouped_ols(
             load_parquet(spark, args.input),
-            args.group_cols.split(","),
+            args.group_cols,
             args.x_col,
             args.y_col,
             rebase_x=not args.no_rebase_x,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} groups -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "groups")
 
-    if args.cmd == "quantile-mv-build":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.quantile_mv import (
-            quantile_mv_build,
-        )
-
-        quantile_mv_build(
+    elif args.cmd == "quantile-mv-build":
+        quantile_mv.quantile_mv_build(
             load_parquet(spark, args.events),
             args.mv,
             args.value_col,
@@ -1746,181 +1541,98 @@ def main(argv: list[str] | None = None) -> int:
         )
         n = spark.read.parquet(args.mv).count()
         print(f"{n} ladder rows -> {args.mv}", file=sys.stderr)
-        return 0
 
-    if args.cmd == "quantile-mv-query":
-        import json as _json
-
-        from activedatawarehouseprototype_spark.operators.quantile_mv import (
-            quantile_mv_query,
-        )
-
-        res = quantile_mv_query(
+    elif args.cmd == "quantile-mv-query":
+        res = quantile_mv.quantile_mv_query(
             spark, args.mv, args.q,
             start_ms=args.start_ms, end_ms=args.end_ms,
         )
-        print(_json.dumps(res))
-        return 0
+        print(json.dumps(res))
 
-    if args.cmd == "purge":
-        from activedatawarehouseprototype_spark.operators.warehouse import (
-            purge_keys,
-        )
-
-        def _typed(v: str):
-            try:
-                return int(v)
-            except ValueError:
-                return v
-
-        keys = [_typed(v) for v in args.keys.split(",") if v != ""]
-        res = purge_keys(spark, args.path, args.key_col, keys)
-        if args.refresh_index:
-            import os as _os
-
-            from activedatawarehouseprototype_spark.operators.skipping import (
-                _index_path,
-                update_skipping_index,
-            )
-
-            if _os.path.exists(_index_path(args.path)):
-                update_skipping_index(spark, args.path)
+    elif args.cmd == "purge":
+        res = warehouse.purge_keys(spark, args.path, args.key_col, args.keys)
+        if args.refresh_index and os.path.exists(skipping._index_path(args.path)):
+            skipping.update_skipping_index(spark, args.path)
         print(
             f"deleted {res['deleted']} rows "
             f"({res['rewritten_files']} files rewritten, "
             f"{res['linked_files']} linked)",
             file=sys.stderr,
         )
-        return 0
 
-    if args.cmd == "collocations":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.text import (
-            pmi_collocations,
-        )
-
-        out = pmi_collocations(
+    elif args.cmd == "collocations":
+        out = text.pmi_collocations(
             load_parquet(spark, args.input),
             args.id_col,
             args.text_col,
             min_count=args.min_count,
             k=args.k,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} collocations -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "collocations")
 
-    if args.cmd == "split-safe":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators import dedup, sampling
-
+    elif args.cmd == "split-safe":
         df = load_parquet(spark, args.input)
         pairs = dedup.lsh_candidates(df, args.id_col, args.text_col)
         out = sampling.cluster_safe_split(
             df, args.id_col, pairs, salt=args.salt
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} rows (cluster+split) -> {args.output}",
-              file=sys.stderr)
-        return 0
+        _write(out, args.output, "rows (cluster+split)")
 
-    if args.cmd == "transitions":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.timeseries import (
-            transition_counts,
-        )
-
-        out = transition_counts(
+    elif args.cmd == "transitions":
+        out = timeseries.transition_counts(
             load_parquet(spark, args.events),
             args.key_col,
             args.ts_col,
             args.state_col,
             args.tie_col,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} transitions -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "transitions")
 
-    if args.cmd == "ab-test":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.abtest import (
-            two_proportion_ztest,
-        )
-
-        out = two_proportion_ztest(
+    elif args.cmd == "ab-test":
+        out = abtest.two_proportion_ztest(
             load_parquet(spark, args.units),
-            args.group_cols.split(","),
+            args.group_cols,
             arm_col=args.arm_col,
             converted_col=args.converted_col,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} groups -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "groups")
 
-    if args.cmd == "classify":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.text import (
-            hashed_linear_score,
-        )
-
-        out = hashed_linear_score(
+    elif args.cmd == "classify":
+        out = text.hashed_linear_score(
             load_parquet(spark, args.input),
             args.text_col,
             n_buckets=args.n_buckets,
             salt=args.salt,
             bigrams=not args.no_bigrams,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} scored docs -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "scored docs")
 
-    if args.cmd == "cuped":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.abtest import (
-            cuped_components,
-        )
-
-        out = cuped_components(
+    elif args.cmd == "cuped":
+        out = abtest.cuped_components(
             load_parquet(spark, args.units),
             arm_col=args.arm_col,
             x_col=args.x_col,
             y_col=args.y_col,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} arms -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "arms")
 
-    if args.cmd == "kcore":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.graph import kcore
-
-        out = kcore(
+    elif args.cmd == "kcore":
+        out = graph.kcore(
             load_parquet(spark, args.edges),
             k=args.k,
             src=args.src_col,
             dst=args.dst_col,
             max_iter=args.max_iter,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} core nodes -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "core nodes")
 
-    if args.cmd == "train-probe":
-        from pyspark.sql import functions as F
-
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.regression import (
-            ridge_probe_score,
-            ridge_probe_solve,
-            ridge_probe_sums,
-        )
-
+    elif args.cmd == "train-probe":
         df = load_parquet(spark, args.input)
-        row = ridge_probe_sums(df, args.x1_col, args.x2_col, args.y_col).head()
+        row = regression.ridge_probe_sums(df, args.x1_col, args.x2_col, args.y_col).head()
         if row is None or row["n"] == 0:
             raise SystemExit("train-probe: empty training set")
         sums = row.asDict()
-        w = ridge_probe_solve(sums, lam=args.lam)
+        w = regression.ridge_probe_solve(sums, lam=args.lam)
         out = spark.createDataFrame(
             [tuple(int(sums[c]) for c in
                    ("n", "s1", "s2", "s11", "s12", "s22", "sy", "s1y", "s2y"))
@@ -1929,27 +1641,21 @@ def main(argv: list[str] | None = None) -> int:
             "s22 bigint, sy bigint, s1y bigint, s2y bigint, "
             "w0_milli bigint, w1_milli bigint, w2_milli bigint",
         )
-        out.coalesce(1).write.mode("overwrite").parquet(args.output)
+        _write(out.coalesce(1), args.output)
         if args.scored_output:
             scored = df.withColumn(
-                "score_milli", ridge_probe_score(w, args.x1_col, args.x2_col)
+                "score_milli",
+                regression.ridge_probe_score(w, args.x1_col, args.x2_col),
             ).withColumn("keep", F.col("score_milli") >= 0)
-            scored.write.mode("overwrite").parquet(args.scored_output)
+            _write(scored, args.scored_output)
         print(
             f"w_milli={list(w)} over n={sums['n']} rows -> {args.output}",
             file=sys.stderr,
         )
-        return 0
 
-    if args.cmd == "substr-spans":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.dedup import (
-            cut_duplicate_spans,
-            exact_substring_spans,
-        )
-
+    elif args.cmd == "substr-spans":
         docs = load_parquet(spark, args.input)
-        out = exact_substring_spans(
+        out = dedup.exact_substring_spans(
             docs,
             args.id_col,
             args.text_col,
@@ -1957,10 +1663,9 @@ def main(argv: list[str] | None = None) -> int:
             min_count=args.min_count,
             hash_grams=args.hash_grams,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} duplicate spans -> {args.output}", file=sys.stderr)
+        _write(out, args.output, "duplicate spans")
         if args.cut_output:
-            clean = cut_duplicate_spans(
+            clean = dedup.cut_duplicate_spans(
                 docs,
                 args.id_col,
                 args.text_col,
@@ -1968,17 +1673,13 @@ def main(argv: list[str] | None = None) -> int:
                 min_count=args.min_count,
                 hash_grams=args.hash_grams,
             )
-            clean.write.mode("overwrite").parquet(args.cut_output)
+            _write(clean, args.cut_output)
             print(f"rewritten corpus -> {args.cut_output}", file=sys.stderr)
-        return 0
 
-    if args.cmd == "ivf-rebuild":
-        from activedatawarehouseprototype_spark.operators.similarity import (
-            ivf_index_rebuild,
-            ivf_pq_index_rebuild,
+    elif args.cmd == "ivf-rebuild":
+        rebuild = (
+            similarity.ivf_pq_index_rebuild if args.pq else similarity.ivf_index_rebuild
         )
-
-        rebuild = ivf_pq_index_rebuild if args.pq else ivf_index_rebuild
         info = rebuild(
             spark,
             args.index,
@@ -1988,13 +1689,9 @@ def main(argv: list[str] | None = None) -> int:
             force=args.force,
         )
         print(json.dumps(info))
-        return 0
 
-    if args.cmd == "ewma":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.timeseries import ewma
-
-        out = ewma(
+    elif args.cmd == "ewma":
+        out = timeseries.ewma(
             load_parquet(spark, args.input),
             args.key_col,
             args.ts_col,
@@ -2002,73 +1699,47 @@ def main(argv: list[str] | None = None) -> int:
             alpha=args.alpha,
             tie_col=args.tie_col,
         )
-        out.write.mode("overwrite").parquet(args.output)
-        print(f"{out.count()} rows -> {args.output}", file=sys.stderr)
-        return 0
+        _write(out, args.output, "rows")
 
-    if args.cmd == "hll-mv-build":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.sketch_mv import (
-            hll_mv_build,
-        )
-
-        gc = tuple(filter(None, (args.group_cols or "").split(",")))
-        hll_mv_build(
+    elif args.cmd == "hll-mv-build":
+        sketch_mv.hll_mv_build(
             load_parquet(spark, args.events),
             args.mv,
             args.key_col,
             bucket_ms=args.bucket_ms,
-            group_cols=gc,
+            group_cols=tuple(args.group_cols or ()),
             ts_col=args.ts_col,
             lgk=args.lgk,
         )
         n = spark.read.parquet(args.mv).count()
         print(f"{n} sketch rows -> {args.mv}", file=sys.stderr)
-        return 0
 
-    if args.cmd == "hll-mv-distinct":
-        from activedatawarehouseprototype_spark.operators.sketch_mv import (
-            hll_mv_distinct,
-        )
-
-        gc = tuple(filter(None, (args.group_cols or "").split(",")))
-        rows = hll_mv_distinct(
+    elif args.cmd == "hll-mv-distinct":
+        rows = sketch_mv.hll_mv_distinct(
             spark, args.mv, start_ms=args.start_ms, end_ms=args.end_ms,
-            group_cols=gc,
+            group_cols=tuple(args.group_cols or ()),
         ).collect()
         print(json.dumps([r.asDict() for r in rows]))
-        return 0
 
-    if args.cmd == "jmv-verify":
-        from activedatawarehouseprototype_spark.operators.warehouse import (
-            jmv_verify,
-        )
-
-        report = jmv_verify(
-            spark, args.base, args.on.split(","),
+    elif args.cmd == "jmv-verify":
+        report = warehouse.jmv_verify(
+            spark, args.base, args.on,
             sample_fraction=args.sample_fraction, salt=args.salt,
         )
         print(json.dumps(report))
         return 0 if report["consistent"] else 1
 
-    if args.cmd == "pca-project":
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-        from activedatawarehouseprototype_spark.operators.pca import (
-            fit_pca,
-            pca_project,
-        )
-
+    elif args.cmd == "pca-project":
         df = load_parquet(spark, args.input)
-        model = fit_pca(df, d=args.d, vec_col=args.vec_col)
-        out = pca_project(
+        model = pca.fit_pca(df, d=args.d, vec_col=args.vec_col)
+        out = pca.pca_project(
             df, model, vec_col=args.vec_col, out_col=args.out_col,
             whiten=args.whiten,
         )
-        out.write.mode("overwrite").parquet(args.output)
         print(
             json.dumps(
                 {
-                    "rows": out.count(),
+                    "rows": _write(out, args.output).count(),
                     "explained_variance": [
                         round(v, 6) for v in model.explained_variance
                     ],
@@ -2076,21 +1747,9 @@ def main(argv: list[str] | None = None) -> int:
             ),
             file=sys.stderr,
         )
-        return 0
 
-    if args.cmd == "run":
-        from activedatawarehouseprototype_spark.streaming.pipeline import (
-            ActivePipeline,
-        )
-        from activedatawarehouseprototype_spark.sources.rule_source import (
-            DirectoryRuleSource,
-        )
-        from activedatawarehouseprototype_spark.streaming.registry import RuleRegistry
-
-        import os
-
+    elif args.cmd == "run":
         registry = RuleRegistry.load(os.path.join(args.work_dir, "rules.jsonl"))
-        registry.persist_path = os.path.join(args.work_dir, "rules.jsonl")
         pipe = ActivePipeline(
             spark=spark,
             registry=registry,
@@ -2100,8 +1759,6 @@ def main(argv: list[str] | None = None) -> int:
             alert_cooldown_ms=args.alert_cooldown_ms,
             stages=stages,
         )
-        from activedatawarehouseprototype_spark.catalog import load_parquet
-
         schema = spark.read.parquet(args.events_dir).schema
         stream = spark.readStream.schema(schema).parquet(args.events_dir)
         # note: nanos-ts streams should be pre-normalized (load_parquet
@@ -2109,9 +1766,8 @@ def main(argv: list[str] | None = None) -> int:
         q = pipe.run_stream(stream, trigger_available_now=args.once)
         q.awaitTermination()
         print(json.dumps(pipe.metrics), file=sys.stderr)
-        return 0
 
-    return 2
+    return 0
 
 
 if __name__ == "__main__":

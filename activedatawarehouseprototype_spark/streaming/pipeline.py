@@ -719,8 +719,9 @@ class ActivePipeline:
                 self._emitted_wm[r.query_id] = max(
                     self._emitted_wm.get(r.query_id, 0), int(r.max_end)
                 )
-        self._persist_watermarks()
-        # (5) ECA spawning (C5-C7)
+        # (5) ECA spawning (C5-C7), before the watermark commit: a
+        # replay after a crash here emits again and re-spawns, and the
+        # C2 re-trigger match lands each child on its existing id
         for row in spawn_rows:
             rule = by_id[row.query_id]
             key_values = parse_composite_key(row.key, rule.grouping_key_names)
@@ -738,6 +739,7 @@ class ActivePipeline:
                 child.born_batch_id = batch_id  # effective from batch_id+1
                 self.registry.apply(child, now)
                 self.metrics["rules_spawned"] += 1
+        self._persist_watermarks()
         self.metrics["last_batch_seconds"] = time.perf_counter() - t_start
 
     def _write_evaluations(self, evals: DataFrame, batch_id: int) -> tuple[int, int]:

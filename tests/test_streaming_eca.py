@@ -667,6 +667,48 @@ def test_pipeline_restart_no_reemission(spark, tmp_path):
     assert [round(r.agg_value, 1) for r in evals] == [130.0, 135.0]
 
 
+class _Crash(Exception):
+    pass
+
+
+@pytest.mark.parametrize("crash_at", ["spawn", "watermark_commit"])
+def test_crash_around_spawn_replay_spawns_child_once(spark, tmp_path, monkeypatch, crash_at):
+    """A process that dies while spawning a fired rule's children, or
+    at the watermark commit after them, loses no child and duplicates
+    none: the replayed batch re-fires and re-spawns, and the C2
+    re-trigger match lands the child on the id it already has."""
+    reg_path = str(tmp_path / "rules.jsonl")
+    wk = str(tmp_path / "wk")
+    reg = RuleRegistry(persist_path=reg_path)
+    reg.apply_json(json.dumps(SPEEDING_RULE))
+    p1 = ActivePipeline(spark=spark, registry=reg, work_dir=wk)
+    with monkeypatch.context() as m:
+        if crash_at == "spawn":
+            apply = RuleRegistry.apply
+
+            def apply_or_crash(self, rule, now_ms=None):
+                if rule.active_id is not None:
+                    raise _Crash
+                apply(self, rule, now_ms)
+
+            m.setattr(RuleRegistry, "apply", apply_or_crash)
+        else:
+            def crash():
+                raise _Crash
+
+            m.setattr(p1, "_persist_watermarks", crash)
+        with pytest.raises(_Crash):
+            p1.process_batch(car_df(spark, [(9, 1, 130.0)]), 0)
+
+    reg2 = RuleRegistry.load(reg_path)
+    p2 = ActivePipeline(spark=spark, registry=reg2, work_dir=wk)
+    p2.process_batch(car_df(spark, [(9, 1, 130.0)]), 0)
+    children = [r for r in reg2.active() if r.active_id == 1]
+    assert len(children) == 1
+    assert RuleRegistry.load(reg_path).rules.keys() == reg2.rules.keys()
+    assert p2.alerts().filter("query_id = 1").count() == 1
+
+
 def test_fifty_rules_one_batch(spark, pipeline):
     """Rule-set scalability: 50 rules evaluate in one unioned plan."""
     reg = pipeline.registry
