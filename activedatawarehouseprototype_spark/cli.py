@@ -145,6 +145,7 @@ def _build_parser() -> argparse.ArgumentParser:
         "reads the batch and writes its own directory; a stage's "
         "required flags must be given together.",
     )
+    pr.set_defaults(run_error=pr.error)
     pr.add_argument("--events-dir", required=True, help="streaming parquet dir")
     pr.add_argument("--rules-dir", required=True, help="watched rule-JSON dir")
     pr.add_argument("--work-dir", required=True)
@@ -923,18 +924,19 @@ def _build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def _all_or_none(flags: dict) -> bool:
-    """True when every one of a stage's required ``{flag: value}`` is
-    given, False when none is; a subset fails at the command line."""
-    given = [f for f, v in flags.items() if v is not None]
-    if given and len(given) < len(flags):
-        missing = [f for f in flags if f not in given]
-        raise SystemExit(f"{', '.join(given)} needs {', '.join(missing)}")
-    return bool(given)
+def _run_stages(args, error) -> list:
+    """The optional pipeline stages the ``run`` flags ask for. A
+    stage's required flags are all-or-none, a rule argparse cannot
+    state: a subset goes to ``error`` (the ``run`` parser's, which
+    exits 2 with the usage line like every other flag error)."""
 
+    def _all_or_none(flags: dict) -> bool:
+        given = [f for f, v in flags.items() if v is not None]
+        if given and len(given) < len(flags):
+            missing = [f for f in flags if f not in given]
+            error(f"{', '.join(given)} needs {', '.join(missing)}")
+        return bool(given)
 
-def _run_stages(args) -> list:
-    """The optional pipeline stages the ``run`` flags ask for."""
     stages = []
     if _all_or_none({"--mv-key": args.mv_key, "--mv-value": args.mv_value}):
         stages.append(SummaryMV(args.mv_key, args.mv_value, args.mv_hist))
@@ -989,7 +991,7 @@ def _write(out: DataFrame, path: str, what: str | None = None) -> DataFrame:
 def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
     # the one flag check argparse cannot state; it exits before Spark
-    stages = _run_stages(args) if args.cmd == "run" else None
+    stages = _run_stages(args, args.run_error) if args.cmd == "run" else None
     if args.spark:
         spark = session.get_spark(app_name=f"adw-{args.cmd}")
         spark.sparkContext.setLogLevel("ERROR")

@@ -37,7 +37,8 @@ sharing layer on top:
    ``inline``s its own list, so each rule selects its aggregate from
    the five and applies its own threshold — no join, no extra job.
    Aggregation cost is O(#shapes); only the final projection is
-   O(#rules).
+   O(#rules). Every mode's branch yields the same columns, so the
+   branches union first and expand once.
 5. W1 (per-event slide) shapes share the scan and get one RANGE-frame
    window pass per *distinct* window size when sizes are few (frame
    bounds must be plan constants — cheapest JVM path); at
@@ -49,6 +50,14 @@ sharing layer on top:
 
 Per-batch Spark-job/scan count is therefore O(#modes), not O(#rules),
 and shuffle volume is O(#shapes), not O(#rules).
+
+Driver cost: with small fresh batches the plan's construction, not
+its execution, is a large share of a micro-batch. The Columns that
+depend only on the rule set and the event schema (``RuleSetPlan``) are
+built once and reused through the caller's ``plans`` memo while the
+rule set is unchanged; a batch pays for its two bound literals and
+about one DataFrame operation per step (each costs a JVM analysis of
+the growing plan, whatever its size).
 
 Codegen invariant: a value that changes every batch rides a REFERENCE
 literal (a folded string/array/map/struct constant, which generated
@@ -271,6 +280,20 @@ def _w1_fused_group(pdf):
     )
 
 
+def _literal_fanout(
+    events: DataFrame, shapes: list[tuple[int, Rule, list[Rule]]], ts_col: str
+) -> list[Column]:
+    """The fan-out projection: the event time plus the inlined array of
+    per-shape match structs. A shape whose filter rejects the row
+    inlines an all-NULL row; a NULL event time (no window in any mode,
+    the contract of rules/compiler.evaluate_rule) inlines a NULL array,
+    i.e. no row. inline, not array_compact + explode: the compact is a
+    lambda that whole-stage codegen falls back on."""
+    ts = F.col(ts_col)
+    structs = [_shape_struct(sid, rep, events) for sid, rep, _ in shapes]
+    return [ts, F.inline(F.when(ts.isNotNull(), F.array(*structs)))]
+
+
 def shape_fanout(
     events: DataFrame, shapes: list[tuple[int, Rule, list[Rule]]], ts_col: str = "ts"
 ) -> DataFrame:
@@ -286,14 +309,9 @@ def shape_fanout(
       lookups instead of literals).
     """
     if len(shapes) <= LITERAL_MAX_SHAPES:
-        # inline + a not-null filter, not array_compact + explode: the
-        # compact is a lambda that whole-stage codegen falls back on
-        return events.select(
-            F.col(ts_col),
-            F.inline(
-                F.array(*[_shape_struct(sid, rep, events) for sid, rep, _ in shapes])
-            ),
-        ).filter(F.col("shape_id").isNotNull())
+        return events.select(*_literal_fanout(events, shapes, ts_col)).filter(
+            F.col("shape_id").isNotNull()
+        )
 
     from activedatawarehouseprototype_spark.operators.fanout import fan_out
 
@@ -323,21 +341,21 @@ def _rule_metas(
     """(shape_id → member-rule aggregate/threshold/emission bounds)
     expansion as ONE JSON literal that Catalyst folds to a constant
     array — the only place rule cardinality appears. Indexed by
-    shape_id + 1."""
-    metas = [
-        [
-            {
-                "query_id": r.query_id,
-                "agg_fn": _agg_fn(r),
-                "limit_op": getattr(r.limit_operator_type, "value", None),
-                "limit_val": None if r.limit is None else float(r.limit),
-                "after": bounds[r.query_id][0],
-                "until": bounds[r.query_id][1],
-            }
-            for r in members
-        ]
-        for _, _, members in shapes
-    ]
+    shape_id + 1. A W0 member reads the ``W0`` aggregate (0.0) and has
+    no threshold, so it never fires."""
+
+    def meta(r: Rule) -> dict:
+        w0 = window_mode(r) == "W0"
+        return {
+            "query_id": r.query_id,
+            "agg_fn": "W0" if w0 else _agg_fn(r),
+            "limit_op": None if w0 else getattr(r.limit_operator_type, "value", None),
+            "limit_val": None if r.limit is None else float(r.limit),
+            "after": bounds[r.query_id][0],
+            "until": bounds[r.query_id][1],
+        }
+
+    metas = [[meta(r) for r in members] for _, _, members in shapes]
     return F.from_json(F.lit(json.dumps(metas)), RULE_META_TYPE)
 
 
@@ -365,15 +383,6 @@ def _in_bounds(end_ms: Column, after: Column, until: Column) -> Column:
     return (after.isNull() | (end_ms > after)) & (until.isNull() | (end_ms <= until))
 
 
-def _members(rows: DataFrame, metas: Column, end_ms: Column) -> DataFrame:
-    """One row per (shape row, member rule) whose emission bounds admit
-    the row's window end — a generator over the row's own slice of the
-    folded metadata literal, no join."""
-    return rows.select(
-        "*", F.inline(F.element_at(metas, F.col("shape_id").cast("int") + 1))
-    ).filter(_in_bounds(end_ms, F.col("after"), F.col("until")))
-
-
 def _fired(agg: Column) -> Column:
     op, lim = F.col("limit_op"), F.col("limit_val")
     return (
@@ -389,28 +398,218 @@ def _fired(agg: Column) -> Column:
 
 
 def _select_agg(used: set[str]) -> Column:
-    """Each rule's own aggregate out of the shape's five. Only the
-    aggregates some rule ``used`` are read, so column pruning drops the
-    others from the aggregation itself."""
+    """Each rule's own aggregate out of the shape's five, 0.0 for a W0
+    member. Only the aggregates some rule ``used`` are read, so column
+    pruning drops the others from the aggregation itself."""
     fn = F.col("agg_fn")
     return F.coalesce(
+        F.when(fn == "W0", F.lit(0.0)),
         *[F.when(fn == n, F.col(c)) for n, c in _AGG_COLS.items() if n in used],
-        F.lit(None),
     ).cast("double")
 
 
-def _expand_rules(aggregated: DataFrame, metas: Column, used: set[str]) -> DataFrame:
-    """shape-level aggregate rows × rule metadata → per-rule EVAL rows."""
-    agg = _select_agg(used)
-    end_ms = F.unix_millis("window_end")
-    return _members(aggregated, metas, end_ms).select(
-        F.col("query_id"),
-        F.col("key"),
-        F.col("window_start"),
-        F.col("window_end"),
-        agg.alias("agg_value"),
-        _fired(agg).alias("fired"),
-    )
+# every evaluation branch yields these columns, so the branches union
+# before ONE per-rule expansion
+_BRANCH_COLS = ("shape_id", "key", "window_start", "window_end", *_AGG_COLS.values())
+
+
+class RuleSetPlan:
+    """Every Column of a grouped evaluation that depends only on the
+    rule set's shapes, the aggregates its rules use and the event
+    schema. Building them is hundreds of py4j round trips (each shape's
+    compiled filter and key, the window math, the per-rule expansion),
+    so ``evaluate_rules_grouped`` reuses one plan for as long as a
+    caller's ``plans`` memo holds it. A batch adds only its emission
+    bounds — two folded literals — and the DataFrame operations over
+    its own events, kept to one per step: fan-out, per-branch
+    aggregation, one union, one expansion."""
+
+    def __init__(
+        self,
+        events: DataFrame,
+        shapes: list[tuple[int, Rule, list[Rule]]],
+        used: set[str],
+        ts_col: str,
+        salt_buckets: int | None,
+    ):
+        self.ts_col = ts_col
+        self.modes = {window_mode(rep) for _, rep, _ in shapes}
+        ts = F.col(ts_col)
+        tsl = F.unix_millis(ts)
+        mode, w = F.col("mode"), F.col("window_ms")
+        aggs = [F.col(c) for c in _AGG_COLS.values()]
+        self.fanout = (
+            _literal_fanout(events, shapes, ts_col)
+            if len(shapes) <= LITERAL_MAX_SHAPES
+            else None
+        )
+        self.sid1 = F.col("shape_id").cast("int") + 1
+
+        # per-event branches, each a row filter and a projection: W0
+        # passthrough (the expansion gives agg 0.0, never fired), and
+        # while W1 window sizes are few, one RANGE-frame window pass per
+        # DISTINCT size (frame bounds must be plan constants), all over
+        # the same fanned-out scan; the five aggregates are computed
+        # once per (shape, event), then expanded per rule. Cheapest
+        # per-row path (pure JVM window exec) while the sizes are few.
+        self.per_event: list[tuple[Column, list[Column]]] = []
+        if "W0" in self.modes:
+            nulls = [F.lit(None).cast("double").alias(c) for c in _AGG_COLS.values()]
+            self.per_event.append((
+                mode == "W0",
+                [F.col("shape_id"), F.col("key"), ts.alias("window_start"),
+                 ts.alias("window_end"), *nulls],
+            ))
+        w1_sizes = sorted(
+            {int(rep.window_milliseconds) for _, rep, _ in shapes if window_mode(rep) == "W1"}
+        )
+        for size in w1_sizes if len(w1_sizes) < W1_FUSE_MIN_SIZES else []:
+            wspec = Window.partitionBy("shape_id", "key").orderBy(tsl).rangeBetween(-size, 0)
+            self.per_event.append((
+                (mode == "W1") & (w == size),
+                [
+                    F.col("shape_id"),
+                    F.col("key"),
+                    (ts - F.expr(f"INTERVAL {size} MILLISECONDS")).alias("window_start"),
+                    ts.alias("window_end"),
+                    F.sum("_value").over(wspec).alias("_sum"),
+                    F.avg("_value").over(wspec).alias("_avg"),
+                    F.min("_value").over(wspec).alias("_min"),
+                    F.max("_value").over(wspec).alias("_max"),
+                    F.count(F.lit(1)).over(wspec).cast("double").alias("_cnt"),
+                ],
+            ))
+        # Many distinct W1 sizes: ONE shuffle on (shape, key) + ONE
+        # Arrow pass computes every shape's trailing aggregates with the
+        # window size read from the row's own window_ms column — pass
+        # count stays O(1) however many W1 sizes are live.
+        self.w1_fused = None
+        if len(w1_sizes) >= W1_FUSE_MIN_SIZES:
+            self.w1_fused = (
+                [F.col("shape_id"), F.col("key"), w, tsl.alias("_tsl"), F.col("_value")],
+                [
+                    F.col("shape_id"),
+                    F.col("key"),
+                    F.timestamp_millis(F.col("_tsl") - w).alias("window_start"),
+                    F.timestamp_millis(F.col("_tsl")).alias("window_end"),
+                    *aggs,
+                ],
+            )
+
+        # W2/W3: epoch-millis integer window math, identical to the
+        # compiler's F.window bucketing and the SQL twin
+        # (rules/sql_gen.py): tumbling start = tsl - tsl % w; sliding
+        # starts = multiples of f in (tsl - w, tsl]. Rows of other modes
+        # (and rows no shape matched) explode a NULL array: no rows.
+        f_ = F.col("freq_ms")
+        ws_arr = F.when(mode == "W2", F.array(tsl - F.pmod(tsl, w))).when(
+            mode == "W3",
+            F.sequence((tsl - w) - F.pmod(tsl - w, f_) + f_, tsl - F.pmod(tsl, f_), f_),
+        )
+        # window_ms is functionally dependent on shape_id — a free
+        # rider in the grouping key, needed for window_end. Grouping
+        # is by the RENDERED key string — reference parity
+        # (DynamicKeyFunction keys the stream by the composite-key
+        # STRING, so NULL and the literal string 'null' in one column
+        # merge into one group). The typed-column grouping of
+        # rules/compiler.py keeps them apart; the pipeline evaluates
+        # every rule here, so its output never depends on which path
+        # a rule took.
+        self.group_cols = ["shape_id", "key", "ws", "window_ms"]
+        self.w23_in = [*map(F.col, ("shape_id", "key", "window_ms", "_value"))]
+        self.salt_buckets = salt_buckets if salt_buckets and salt_buckets > 1 else None
+        if self.salt_buckets:
+            # two-phase salted aggregation for hot composite keys
+            self.w23_in.append(
+                F.pmod(F.crc32(ts.cast("string")), self.salt_buckets).alias("_salt")
+            )
+            self.salted_aggs = [
+                F.sum("_value").alias("_psum"),
+                F.count("_value").alias("_pvcnt"),
+                F.min("_value").alias("_pmin"),
+                F.max("_value").alias("_pmax"),
+                F.count(F.lit(1)).alias("_pcnt"),
+            ]
+            self.w23_aggs = [
+                F.sum("_psum").alias("_sum"),
+                (F.sum("_psum") / F.sum("_pvcnt")).alias("_avg"),
+                F.min("_pmin").alias("_min"),
+                F.max("_pmax").alias("_max"),
+                F.sum("_pcnt").cast("double").alias("_cnt"),
+            ]
+        else:
+            self.w23_aggs = [
+                F.sum("_value").alias("_sum"),
+                F.avg("_value").alias("_avg"),
+                F.min("_value").alias("_min"),
+                F.max("_value").alias("_max"),
+                F.count(F.lit(1)).cast("double").alias("_cnt"),
+            ]
+        self.w23_in.append(F.explode(ws_arr).alias("ws"))
+        self.w23_end = F.col("ws") + w
+        self.w23_out = [
+            F.col("shape_id"),
+            F.col("key"),
+            F.timestamp_millis(F.col("ws")).alias("window_start"),
+            F.timestamp_millis(self.w23_end).alias("window_end"),
+            *aggs,
+        ]
+
+        # per-rule expansion: one row per (branch row, member rule)
+        # whose emission bounds admit the window end, each rule taking
+        # its own aggregate and threshold
+        agg = _select_agg(used)
+        self.member_ok = _in_bounds(
+            F.unix_millis("window_end"), F.col("after"), F.col("until")
+        )
+        self.expanded = [
+            F.col("query_id"),
+            F.col("key"),
+            F.col("window_start"),
+            F.col("window_end"),
+            agg.alias("agg_value"),
+            _fired(agg).alias("fired"),
+        ]
+
+    def evaluate(
+        self,
+        events: DataFrame,
+        shapes: list[tuple[int, Rule, list[Rule]]],
+        bounds: dict[int, tuple],
+    ) -> DataFrame:
+        if self.fanout is not None:
+            keyed = events.select(*self.fanout)
+        else:
+            # null event time ⇒ no window ⇒ excluded in every mode
+            keyed = shape_fanout(
+                events.filter(F.col(self.ts_col).isNotNull()), shapes, self.ts_col
+            )
+        parts = [keyed.filter(cond).select(*cols) for cond, cols in self.per_event]
+        if self.w1_fused:
+            fused_in, fused_out = self.w1_fused
+            fused = (
+                keyed.filter(F.col("mode") == "W1")
+                .select(*fused_in)
+                .groupBy("shape_id", "key")
+                .applyInPandas(_w1_fused_group, _W1_FUSED_SCHEMA)
+            )
+            parts.append(fused.select(*fused_out))
+        if self.modes & {"W2", "W3"}:
+            # windows no member rule may emit are dropped before the
+            # aggregation, so a batch with nothing to emit aggregates nothing
+            sb = F.element_at(_shape_bounds(shapes, bounds), self.sid1)
+            w23 = keyed.select(*self.w23_in).filter(
+                _in_bounds(self.w23_end, sb["after"], sb["until"])
+            )
+            if self.salt_buckets:
+                w23 = w23.groupBy(*self.group_cols, "_salt").agg(*self.salted_aggs)
+            grouped = w23.groupBy(*self.group_cols).agg(*self.w23_aggs)
+            parts.append(grouped.select(*self.w23_out))
+        rows = reduce(lambda a, b: a.unionByName(b), parts)
+        members = F.inline(F.element_at(_rule_metas(shapes, bounds), self.sid1))
+        return rows.select(*_BRANCH_COLS, members).filter(self.member_ok).select(
+            *self.expanded
+        )
 
 
 def evaluate_rules_grouped(
@@ -419,6 +618,7 @@ def evaluate_rules_grouped(
     ts_col: str = "ts",
     salt_buckets: int | None = None,
     emit_bounds: dict[int, tuple[int | None, int | None]] | None = None,
+    plans: dict | None = None,
 ) -> DataFrame:
     """Evaluate every ACTIVE rule over ``events`` with O(#modes) scans
     (ONE scan + ONE shuffle when all rules are W2/W3) and O(#shapes)
@@ -430,6 +630,11 @@ def evaluate_rules_grouped(
     returned (``None`` = unbounded on that side; absent rules are
     unbounded). The bounds are data of the folded literals, so plans
     that differ only in bounds share their compiled classes.
+
+    ``plans`` is the caller's memo of ``RuleSetPlan``: pass the same
+    dict on every call and a rule set whose shapes, aggregates and
+    event schema are unchanged reuses its Columns. It holds one plan;
+    a changed rule set or schema replaces it.
 
     Rules must be pre-validated with ``validate_rule_fields`` — unknown
     fields here would aggregate nulls instead of raising.
@@ -445,167 +650,22 @@ def evaluate_rules_grouped(
     active = [r for r in rules if r.query_state is RuleState.ACTIVE]
     if not active:
         raise ValueError("no ACTIVE rules")
-    # null event time ⇒ no window ⇒ excluded in every mode (same
-    # contract as rules/compiler.evaluate_rule)
-    events = events.filter(F.col(ts_col).isNotNull())
     shapes = group_shapes(active)
+    used = {_agg_fn(r) for r in active}
+    key = (
+        tuple(shape_key(rep) for _, rep, _ in shapes),
+        frozenset(used),
+        tuple(events.dtypes),
+        ts_col,
+        salt_buckets,
+    )
+    plan = plans.get(key) if plans is not None else None
+    if plan is None:
+        plan = RuleSetPlan(events, shapes, used, ts_col, salt_buckets)
+        if plans is not None:
+            plans.clear()
+            plans[key] = plan
     bounds = {
         r.query_id: (emit_bounds or {}).get(r.query_id, (None, None)) for r in active
     }
-    metas = _rule_metas(shapes, bounds)
-    used = {_agg_fn(r) for r in active}
-    modes = {window_mode(rep) for _, rep, _ in shapes}
-    keyed = shape_fanout(events, shapes, ts_col)
-
-    ts = F.col(ts_col)
-    tsl = F.unix_millis(ts)
-    branches: list[DataFrame] = []
-
-    if "W0" in modes:
-        # Per-event passthrough: agg=0, fired=false — the metas lookup
-        # only supplies each member rule's query_id.
-        w0 = _members(keyed.filter(F.col("mode") == "W0"), metas, tsl)
-        branches.append(
-            w0.select(
-                F.col("query_id"),
-                F.col("key"),
-                ts.alias("window_start"),
-                ts.alias("window_end"),
-                F.lit(0.0).alias("agg_value"),
-                F.lit(False).alias("fired"),
-            )
-        )
-
-    if "W1" in modes:
-        w1_sizes = sorted(
-            {
-                int(rep.window_milliseconds)
-                for _, rep, _ in shapes
-                if window_mode(rep) == "W1"
-            }
-        )
-        if len(w1_sizes) < W1_FUSE_MIN_SIZES:
-            # RANGE frame bounds must be plan constants → one window
-            # pass per DISTINCT window size (control-plane cardinality),
-            # all over the same fanned-out scan; the five aggregates are
-            # computed once per (shape, event), then expanded per rule.
-            # Cheapest per-row path (pure JVM window exec) while the
-            # size population is small.
-            for w in w1_sizes:
-                sub = keyed.filter(
-                    (F.col("mode") == "W1") & (F.col("window_ms") == w)
-                )
-                wspec = (
-                    Window.partitionBy("shape_id", "key")
-                    .orderBy(tsl)
-                    .rangeBetween(-w, 0)
-                )
-                aggd = sub.select(
-                    F.col("shape_id"),
-                    F.col("key"),
-                    (ts - F.expr(f"INTERVAL {w} MILLISECONDS")).alias(
-                        "window_start"
-                    ),
-                    ts.alias("window_end"),
-                    F.sum("_value").over(wspec).alias("_sum"),
-                    F.avg("_value").over(wspec).alias("_avg"),
-                    F.min("_value").over(wspec).alias("_min"),
-                    F.max("_value").over(wspec).alias("_max"),
-                    F.count(F.lit(1)).over(wspec).cast("double").alias("_cnt"),
-                )
-                branches.append(_expand_rules(aggd, metas, used))
-        else:
-            # Many distinct sizes: ONE shuffle on (shape, key) + ONE
-            # Arrow pass computes every shape's trailing aggregates with
-            # the window size read from the row's own window_ms column —
-            # pass count stays O(1) however many W1 sizes are live.
-            sub = keyed.filter(F.col("mode") == "W1").select(
-                "shape_id",
-                "key",
-                "window_ms",
-                tsl.alias("_tsl"),
-                "_value",
-            )
-            fused = sub.groupBy("shape_id", "key").applyInPandas(
-                _w1_fused_group, _W1_FUSED_SCHEMA
-            )
-            aggd = fused.select(
-                F.col("shape_id"),
-                F.col("key"),
-                F.timestamp_millis(
-                    F.col("_tsl") - F.col("window_ms")
-                ).alias("window_start"),
-                F.timestamp_millis(F.col("_tsl")).alias("window_end"),
-                "_sum", "_avg", "_min", "_max", "_cnt",
-            )
-            branches.append(_expand_rules(aggd, metas, used))
-
-    if "W2" in modes or "W3" in modes:
-        w = F.col("window_ms")
-        f_ = F.col("freq_ms")
-        # epoch-millis integer window math, identical to the compiler's
-        # F.window bucketing and the SQL twin (rules/sql_gen.py):
-        # tumbling start = tsl - tsl % w; sliding starts = multiples of
-        # f in (tsl - w, tsl].
-        tumb_start = tsl - F.pmod(tsl, w)
-        slide_first = (tsl - w) - F.pmod(tsl - w, f_) + f_
-        slide_last = tsl - F.pmod(tsl, f_)
-        ws_arr = F.when(F.col("mode") == "W2", F.array(tumb_start)).otherwise(
-            F.sequence(slide_first, slide_last, f_)
-        )
-        # windows no member rule may emit are dropped before the
-        # aggregation, so a batch with nothing to emit aggregates nothing
-        sb = F.element_at(
-            _shape_bounds(shapes, bounds), F.col("shape_id").cast("int") + 1
-        )
-        w23 = (
-            keyed.filter(F.col("mode").isin("W2", "W3"))
-            .withColumn("ws", F.explode(ws_arr))
-            .filter(_in_bounds(F.col("ws") + w, sb["after"], sb["until"]))
-        )
-        # window_ms is functionally dependent on shape_id — a free
-        # rider in the grouping key, needed for window_end. Grouping
-        # is by the RENDERED key string — reference parity
-        # (DynamicKeyFunction keys the stream by the composite-key
-        # STRING, so NULL and the literal string 'null' in one column
-        # merge into one group). The typed-column grouping of
-        # rules/compiler.py keeps them apart; the pipeline evaluates
-        # every rule here, so its output never depends on which path
-        # a rule took.
-        group_cols = ["shape_id", "key", "ws", "window_ms"]
-        if salt_buckets and salt_buckets > 1:
-            salted = w23.withColumn(
-                "_salt", F.pmod(F.crc32(F.col(ts_col).cast("string")), salt_buckets)
-            )
-            partial = salted.groupBy(*group_cols, "_salt").agg(
-                F.sum("_value").alias("_psum"),
-                F.count("_value").alias("_pvcnt"),
-                F.min("_value").alias("_pmin"),
-                F.max("_value").alias("_pmax"),
-                F.count(F.lit(1)).alias("_pcnt"),
-            )
-            grouped = partial.groupBy(*group_cols).agg(
-                F.sum("_psum").alias("_sum"),
-                (F.sum("_psum") / F.sum("_pvcnt")).alias("_avg"),
-                F.min("_pmin").alias("_min"),
-                F.max("_pmax").alias("_max"),
-                F.sum("_pcnt").cast("double").alias("_cnt"),
-            )
-        else:
-            grouped = w23.groupBy(*group_cols).agg(
-                F.sum("_value").alias("_sum"),
-                F.avg("_value").alias("_avg"),
-                F.min("_value").alias("_min"),
-                F.max("_value").alias("_max"),
-                F.count(F.lit(1)).cast("double").alias("_cnt"),
-            )
-        aggd = grouped.select(
-            F.col("shape_id"),
-            F.col("key"),
-            F.timestamp_millis(F.col("ws")).alias("window_start"),
-            F.timestamp_millis(F.col("ws") + F.col("window_ms")).alias("window_end"),
-            "_sum", "_avg", "_min", "_max", "_cnt",
-        )
-        branches.append(_expand_rules(aggd, metas, used))
-
-    return reduce(lambda a, b: a.unionByName(b), branches)
+    return plan.evaluate(events, shapes, bounds)

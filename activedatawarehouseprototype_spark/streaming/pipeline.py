@@ -40,6 +40,30 @@ threshold) → alerts + spawned rules. Here each ``foreachBatch``:
    OOM the driver (the reference throttles per event,
    KafkaSender.java:65-79).
 
+What overlaps. A steady batch is a chain of small Spark jobs whose
+fixed cost, not scan volume, sets its latency, so the writes nothing
+downstream reads run beside the chain, on a small shared pool
+(``_SideWrites``):
+- the K3 latency side-output starts with the buffer write, from the
+  un-observed batch frame;
+- the alerts write starts once the evaluations are written, beside
+  ONE control collect (the emission watermarks plus the spawn trigger
+  pairs).
+Ordering invariants:
+- every side write is joined, and its error re-raised, before the
+  alert-cooldown commit, the spawns and the watermark swap — a batch
+  whose side write failed commits nothing and replays whole;
+- the cooldown commit comes after the alerts write (write-then-commit,
+  see ``_apply_alert_cooldown``);
+- a failing batch still waits for its side writes, so none lands
+  after ``process_batch`` returns or raises;
+- no session SQL conf changes while a side write is in flight (a
+  side write would plan under the changed conf): no step after the
+  stages changes it, and the stages run before the first side write.
+A side write carries the batch thread's job group and local
+properties (``pyspark.inheritable_thread_target``), so job accounting
+(``measure.JobCounter``) and the streaming query see its jobs.
+
 Scale notes: the driver touches only rules and fired keys (control
 plane). Events flow scan → fan-out → one shared shuffle; the buffer is
 columnar parquet, partition-prunable by ts; at cluster scale the
@@ -55,10 +79,13 @@ import os
 import shutil
 import tempfile
 import time
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field as dc_field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from activedatawarehouseprototype_spark.rules.compiler import (  # noqa: F401
     evaluate_rule,  # not called here; perfbench/streams.py patches this name
@@ -88,6 +115,38 @@ _log = logging.getLogger(__name__)
 
 def _now_ms() -> int:
     return time.time_ns() // 1_000_000
+
+
+# the sink writes a micro-batch runs beside its critical path: at most
+# two are in flight per batch (the latency side-output and the alerts)
+_SIDE_WRITES = ThreadPoolExecutor(max_workers=2, thread_name_prefix="adw-side-write")
+
+
+class _SideWrites:
+    """One batch's side writes on the shared pool. Each runs through
+    ``inheritable_thread_target``, so it carries the submitting
+    thread's job group and local properties (``measure.JobCounter``
+    and the streaming query's execution see its jobs). ``join`` waits
+    for all of them and re-raises the first failure; ``wait`` only
+    waits, for when the batch is failing anyway."""
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self.futures: list[Future] = []
+
+    def submit(self, fn, *args) -> None:
+        self.futures.append(
+            _SIDE_WRITES.submit(inheritable_thread_target(self.spark)(fn), *args)
+        )
+
+    def wait(self) -> None:
+        wait(self.futures)
+
+    def join(self) -> None:
+        self.wait()
+        futures, self.futures = self.futures, []
+        for f in futures:
+            f.result()
 
 
 @dataclass
@@ -163,6 +222,9 @@ class ActivePipeline:
     # this batch's emitted-alert clocks, committed to the cooldown
     # state only after the alerts sink write
     _cooldown_pending: DataFrame | None = None
+    # group_eval's memo of the evaluation Columns that depend only on
+    # the rule set and the buffer schema (group_eval.RuleSetPlan)
+    _plans: dict = dc_field(default_factory=dict, repr=False)
     # per-rule emission high-watermark: query_id -> max emitted window_end (ms)
     _emitted_wm: dict[int, int] = dc_field(default_factory=dict)
     _batch_count: int = 0
@@ -430,6 +492,16 @@ class ActivePipeline:
     # -- main entry: one micro-batch ------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        side = _SideWrites(self.spark)
+        try:
+            self._run_batch(batch_df, batch_id, side)
+        finally:
+            # a failing batch still waits for its side writes: none may
+            # land after the batch has returned or raised (a replay
+            # would race it for the same batch directory)
+            side.wait()
+
+    def _run_batch(self, batch_df: DataFrame, batch_id: int, side: _SideWrites) -> None:
         now = _now_ms()
         t_start = time.perf_counter()
         self._batch_count += 1
@@ -480,8 +552,6 @@ class ActivePipeline:
         # (1b) observed batch metrics (ingest count + K3 latency) —
         # df.observe piggybacks the buffer write below, so NO extra
         # per-batch job touches the events.
-        from pyspark.sql import Observation
-
         obs = Observation(f"batch_{batch_id}")
         # the batch's max event ts (advances the event-time high
         # watermark) rides the SAME observation — computing it with a
@@ -496,17 +566,18 @@ class ActivePipeline:
                 F.col(self.process_ts_col)
             )
             obs_cols += [F.avg(lat).alias("avg_ms"), F.max(lat).alias("max_ms")]
-        batch_df = batch_df.observe(obs, *obs_cols)
+        observed = batch_df.observe(obs, *obs_cols)
         if has_latency:
-            # per-batch overwrite dir: an at-least-once replay of this
-            # batch replaces its own rows instead of appending
-            # duplicates (same idempotence shape as the buffer/
-            # quarantine writes)
-            batch_df.select(
-                F.col(self.ts_col).alias("event_ts"),
-                lat.alias("latency_ms"),
-            ).write.mode("overwrite").parquet(
-                os.path.join(self.latency_path, f"batch={batch_id}")
+            # the K3 side-output, written beside the buffer write from
+            # the un-observed frame; a per-batch overwrite dir, so an
+            # at-least-once replay of this batch replaces its own rows
+            # instead of appending duplicates (same idempotence shape
+            # as the buffer/quarantine writes)
+            side.submit(
+                batch_df.select(
+                    F.col(self.ts_col).alias("event_ts"), lat.alias("latency_ms")
+                ).write.mode("overwrite").parquet,
+                os.path.join(self.latency_path, f"batch={batch_id}"),
             )
 
         active = self.registry.active()
@@ -526,8 +597,8 @@ class ActivePipeline:
 
         # (2) shared event buffer with widest-window retention, read
         # back only when some rule evaluates it
-        buffer = self._update_buffer(batch_df, batch_id, read=bool(active))
-        vals = obs.get  # populated by the buffer/latency writes above
+        buffer = self._update_buffer(observed, batch_id, read=bool(active))
+        vals = obs.get  # populated by the buffer write above
         bmax = vals.get("_max_ts")
         if bmax is not None:
             self._max_event_ts = max(self._max_event_ts or 0, int(bmax))
@@ -537,8 +608,7 @@ class ActivePipeline:
             self.metrics["latency_max_ms"] = vals.get("max_ms")
         if not active:
             self._watching = {}  # nothing evaluated this batch
-            self._persist_watermarks()
-            self.metrics["last_batch_seconds"] = time.perf_counter() - t_start
+            self._commit(side, t_start)
             return
 
         # (3) evaluate every active rule over the buffer in ONE
@@ -565,8 +635,7 @@ class ActivePipeline:
                 self._quarantine(rule, str(e))
         if not by_id:
             self._watching = {}  # nothing evaluated this batch
-            self._persist_watermarks()
-            self.metrics["last_batch_seconds"] = time.perf_counter() - t_start
+            self._commit(side, t_start)
             return
 
         # (3a) registration/reentry gate: a rule ENTERING evaluation
@@ -652,6 +721,7 @@ class ActivePipeline:
             ts_col=self.ts_col,
             salt_buckets=self.salt_buckets,
             emit_bounds=bounds,
+            plans=self._plans,
         )
         n_rows, n_fired = self._write_evaluations(evals, batch_id)
         # every later read takes this batch's rows back from the small
@@ -678,7 +748,6 @@ class ActivePipeline:
                 left_batch=evals,
                 batch_id=batch_id,
             )
-        wm_rows, spawn_rows = [], []
         if n_fired:
             fired = evals.filter("fired")
             emitted = (
@@ -688,34 +757,31 @@ class ActivePipeline:
             )
             # written only when non-empty, so a replay that fires
             # nothing cannot erase the original batch's alerts; a
-            # cooldown that suppressed every firing leaves none pending
+            # cooldown that suppressed every firing leaves none pending.
+            # The write runs beside the control collect below.
             if not self.alert_cooldown_ms or self._cooldown_pending is not None:
-                emitted.write.mode("overwrite").parquet(
-                    os.path.join(self.alerts_path, "data", f"batch={batch_id}")
+                side.submit(
+                    emitted.write.mode("overwrite").parquet,
+                    os.path.join(self.alerts_path, "data", f"batch={batch_id}"),
                 )
-            if self.alert_cooldown_ms:
-                # durable clock commits only after the sink write above
-                self._commit_alert_cooldown()
-            # Bounded control-plane collect: DISTINCT trigger pairs,
-            # capped — the driver never materializes the data plane.
-            spawning_ids = [qid for qid, r in by_id.items() if r.alert_rules]
-            if spawning_ids:
-                spawn_rows = (
-                    fired.filter(F.col("query_id").isin(spawning_ids))
-                    .select("query_id", "key")
-                    .distinct()
-                    .limit(self.spawn_collect_cap)
-                    .collect()
-                )
-        if n_rows:
-            wm_rows = (
-                evals.groupBy("query_id")
-                .agg(F.max(F.unix_millis("window_end")).alias("max_end"))
-                .collect()
-            )
+        spawning_ids = [qid for qid, r in by_id.items() if r.alert_rules]
+        control = (
+            self._collect_control(evals, spawning_ids if n_fired else [])
+            if n_rows
+            else []
+        )
+        # every side write lands before anything that commits the
+        # batch: the cooldown clocks, the spawns and the watermarks
+        side.join()
+        if self.alert_cooldown_ms:
+            # durable clock commits only after the alerts sink write
+            self._commit_alert_cooldown()
         self.metrics["alerts_fired"] += n_fired
-        for r in wm_rows:
-            if r.max_end is not None:
+        spawn_rows = []
+        for r in control:
+            if r.max_end is None:
+                spawn_rows.append(r)
+            else:
                 self._emitted_wm[r.query_id] = max(
                     self._emitted_wm.get(r.query_id, 0), int(r.max_end)
                 )
@@ -739,8 +805,38 @@ class ActivePipeline:
                 child.born_batch_id = batch_id  # effective from batch_id+1
                 self.registry.apply(child, now)
                 self.metrics["rules_spawned"] += 1
+        self._commit(side, t_start)
+
+    def _commit(self, side: _SideWrites, t_start: float) -> None:
+        """End a batch: its side writes first, then the watermark swap
+        that marks the batch done."""
+        side.join()
         self._persist_watermarks()
         self.metrics["last_batch_seconds"] = time.perf_counter() - t_start
+
+    def _collect_control(self, evals: DataFrame, spawning_ids: list[int]) -> list:
+        """This batch's control-plane rows in ONE job: per rule, the
+        max emitted window_end (``max_end``, its next emission
+        watermark), and for the ``spawning_ids`` the DISTINCT fired
+        (query_id, key) trigger pairs (``max_end`` NULL), capped at
+        ``spawn_collect_cap`` — distinct before the cap, so the cap
+        counts pairs, and the driver never materializes the data
+        plane. ``coalesce(1)`` gives each side a single partition, so
+        neither aggregate needs an exchange and the union runs as one
+        job of two tasks."""
+        one = evals.coalesce(1)
+        out = one.groupBy("query_id").agg(
+            F.max(F.unix_millis("window_end")).alias("max_end")
+        )
+        if spawning_ids:
+            pairs = (
+                one.filter(F.col("fired") & F.col("query_id").isin(spawning_ids))
+                .select("query_id", "key")
+                .distinct()
+                .limit(self.spawn_collect_cap)
+            )
+            out = out.unionByName(pairs, allowMissingColumns=True)
+        return out.collect()
 
     def _write_evaluations(self, evals: DataFrame, batch_id: int) -> tuple[int, int]:
         """Write this batch's evaluation rows to ``evaluations/batch=<id>``
@@ -757,8 +853,6 @@ class ActivePipeline:
         ``batch`` directory names still read back as integers. The path
         is given as ``evaluations/`` so path-based write accounting
         (perfbench/streams.py) files it as a sink write."""
-        from pyspark.sql import Observation
-
         obs = Observation(f"evals_{batch_id}")
         evals.observe(
             obs,
@@ -880,6 +974,17 @@ class ActivePipeline:
         )
 
         recover_swap(self.buffer_path)
+        # the buffer is read back with the schema it is written with —
+        # the batch's own plus the partition columns — never inferred
+        # from a footer (an extra job per batch, and a footer of an
+        # older batch would hide a column added since)
+        schema = StructType(
+            [
+                *batch_df.schema.fields,
+                StructField(self.BATCH_COL, LongType()),
+                StructField(self.BUCKET_COL, LongType()),
+            ]
+        )
         batch_df.withColumn(self.BUCKET_COL, self._bucket_expr()).write.mode(
             "overwrite"
         ).partitionBy(self.BUCKET_COL).parquet(
@@ -911,7 +1016,7 @@ class ActivePipeline:
             # frame IS the buffer (plus the _batch column the real read
             # carries for born-batch scoping).
             return batch_df.limit(0).withColumn(
-                self.BATCH_COL, F.lit(batch_id).cast("int")
+                self.BATCH_COL, F.lit(batch_id).cast("bigint")
             )
 
         # (crash recovery for a mid-compaction swap already ran at the
@@ -923,7 +1028,7 @@ class ActivePipeline:
         prune = self._batch_count % self.PRUNE_EVERY == 0
         if not (read or prune):
             return None
-        buffer = self.spark.read.parquet(self.buffer_path)
+        buffer = self.spark.read.schema(schema).parquet(self.buffer_path)
 
         def _retained(df: DataFrame) -> DataFrame:
             if horizon is None:
@@ -971,7 +1076,7 @@ class ActivePipeline:
                 self._pruned_to = max(self._pruned_to or 0, horizon)
             # keep the retention predicate on the compacted read so
             # evaluation semantics don't depend on prune timing
-            buffer = _retained(self.spark.read.parquet(self.buffer_path))
+            buffer = _retained(self.spark.read.schema(schema).parquet(self.buffer_path))
         # _batch stays: evaluation scopes SPAWNED rules to events
         # ingested after their birth batch (a filter conjunct on it)
         return buffer.drop(self.BUCKET_COL)

@@ -68,12 +68,16 @@ def test_flag_error_exits_2_before_spark(no_spark, argv):
     assert exc.value.code == 2
 
 
-def test_run_partial_stage_exits_before_spark(no_spark):
+def test_run_partial_stage_exits_before_spark(no_spark, capsys):
     """A stage's required flags are all-or-none, a rule argparse cannot
-    state: the exit carries the message naming the missing flag."""
+    state: it exits 2 like every other flag error, naming the missing
+    flag under the ``run`` usage line."""
     with pytest.raises(SystemExit) as exc:
         cli.main([*RUN, "--cusum-value", "v"])
-    assert exc.value.code == "--cusum-value needs --cusum-target"
+    assert exc.value.code == 2
+    err = capsys.readouterr().err
+    assert "usage: adw-spark run" in err
+    assert "--cusum-value needs --cusum-target" in err
 
 
 def test_eval_fired_rows_match_sql_twin_on_duckdb(spark, sf_dir, tmp_path, capsys):

@@ -583,7 +583,7 @@ def test_stratified_sample_rates(spark):
     assert "c" not in counts                # default 0.0 drops the rest
 
 
-def test_cli_run_subcommand_e2e(spark, tmp_path):
+def test_cli_run_subcommand_e2e(spark, tmp_path, capsys):
     """`cli run --once` drains a parquet stream through the active
     pipeline with rules from the watched dir and writes alerts. The
     stage flags build their stages (each gate's output directory holds
@@ -660,15 +660,16 @@ def test_cli_run_subcommand_e2e(spark, tmp_path):
     for out in ("anomalies", "drift", "cusum", "madgate"):
         assert spark.read.parquet(str(gate_work / out)).count() > 0, out
 
-    # --cusum-value without --cusum-target: non-zero exit
+    # --cusum-value without --cusum-target: a usage error, exit 2
+    capsys.readouterr()
     with pytest.raises(SystemExit) as exc:
         main([
             "run", "--events-dir", gate_events, "--rules-dir", str(tmp_path / "no_rules"),
             "--work-dir", str(tmp_path / "half_work"), "--once",
             "--cusum-value", "speed",
         ])
-    assert exc.value.code not in (0, None)
-    assert "--cusum-target" in str(exc.value.code)
+    assert exc.value.code == 2
+    assert "--cusum-value needs --cusum-target" in capsys.readouterr().err
 
 
 def test_curation_pipeline_end_to_end(spark):

@@ -709,6 +709,85 @@ def test_crash_around_spawn_replay_spawns_child_once(spark, tmp_path, monkeypatc
     assert p2.alerts().filter("query_id = 1").count() == 1
 
 
+@pytest.mark.parametrize("sink", ["latency", "alerts"])
+def test_crash_in_side_write_fails_batch_before_commit(spark, tmp_path, monkeypatch, sink):
+    """The latency and alerts writes run beside the batch's critical
+    path. One that dies fails its batch: ``process_batch`` raises
+    before the watermark commit, and a restarted pipeline replaying
+    the batch converges to a run that never crashed — evaluations,
+    alerts, latency rows and the spawned children alike."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    batches = [
+        [(9, 1, 130.0), (7, 2, 90.0)],  # car 9 speeds: child spawned
+        [(9, 11, 140.0), (7, 12, 95.0)],  # the parent and the child fire
+        [(9, 21, 50.0), (7, 22, 60.0)],
+    ]
+
+    def batch(i):
+        # processTime and the latency write's clock are one query's
+        # current_timestamp, so every latency_ms is 0: comparable
+        return car_df(spark, batches[i]).withColumn("processTime", F.current_timestamp())
+
+    def start(wk, load=False):
+        (tmp_path / wk).mkdir(exist_ok=True)
+        reg_path = str(tmp_path / wk / "rules.jsonl")
+        if load:
+            reg = RuleRegistry.load(reg_path)
+        else:
+            reg = RuleRegistry(persist_path=reg_path)
+            reg.apply_json(json.dumps(SPEEDING_RULE))
+        return ActivePipeline(spark=spark, registry=reg, work_dir=str(tmp_path / wk / "wk"))
+
+    def snapshot(pipe):
+        def rid(qid):
+            r = pipe.registry.rules.get(qid)
+            if r is None or r.active_id is None:
+                return (qid,)
+            return (r.active_id, *[(f.field, f.value) for f in r.window_filter_rules])
+
+        def rows(df):
+            return sorted(
+                (rid(r.query_id), r.key, r.window_start, r.window_end, r.agg_value, r.fired)
+                for r in df.collect()
+            )
+
+        return (
+            rows(pipe.evaluations()),
+            rows(pipe.alerts()),
+            sorted(tuple(r) for r in pipe.latency().collect()),
+            sorted(rid(r.query_id) for r in pipe.registry.active()),
+        )
+
+    clean = start("clean")
+    for i in range(3):
+        clean.process_batch(batch(i), i)
+    want = snapshot(clean)
+    assert len(want[1]) >= 2 and len(want[3]) == 2  # alerts fired, one child
+
+    p1 = start("crash")
+    p1.process_batch(batch(0), 0)
+    wm = tmp_path / "crash" / "wk" / "emitted_watermarks.json"
+    committed = wm.read_text()
+    parquet = DataFrameWriter.parquet
+
+    def parquet_or_crash(self, path, *args, **kwargs):
+        if f"/{sink}/" in path:
+            raise _Crash
+        return parquet(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet_or_crash)
+        with pytest.raises(_Crash):
+            p1.process_batch(batch(1), 1)
+    assert wm.read_text() == committed
+
+    p2 = start("crash", load=True)
+    for i in (1, 2):
+        p2.process_batch(batch(i), i)
+    assert snapshot(p2) == want
+
+
 def test_fifty_rules_one_batch(spark, pipeline):
     """Rule-set scalability: 50 rules evaluate in one unioned plan."""
     reg = pipeline.registry

@@ -7,14 +7,18 @@ single-rule workload bench.py's streaming_events_per_sec measures.
 Batch ``i`` holds the ``i``-th contiguous event-time slice, so every
 batch after the first closes windows and emits. ``RULES=eca`` swaps the
 single rule for eca_loop's 20 wire rules (perfbench/gen.py: the paper's
-four ECA rules, one of which spawns children, plus 16 standing rules).
+four ECA rules, one of which spawns children, plus 16 standing rules)
+and gives the events eca_loop's ``processTime`` column, so the batch
+also writes the latency side-output.
 
 Jobs are counted through job groups and the status tracker
 (``measure.JobCounter``); each count flushes the listener bus with one
 sentinel job, whose time lands in the enclosing batch's wall time but
-never in its job count. Codegen compiles are classes the JVM compiled
-(``measure.codegen_compiles``): a steady batch whose plan only changes
-in data-sized values should compile none."""
+never in its job count. A batch's count includes the jobs of its side
+writes, which run on the pipeline's side-write threads; they are also
+reported apart ("on side threads"). Codegen compiles are classes the
+JVM compiled (``measure.codegen_compiles``): a steady batch whose plan
+only changes in data-sized values should compile none."""
 
 from __future__ import annotations
 
@@ -24,6 +28,7 @@ import shutil
 import sys
 import tempfile
 import time
+import uuid
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
@@ -32,6 +37,7 @@ from pyspark.sql import functions as F
 
 from activedatawarehouseprototype_spark.measure import JobCounter, codegen_compiles
 from activedatawarehouseprototype_spark.session import get_spark
+from activedatawarehouseprototype_spark.streaming import pipeline as pipeline_mod
 from activedatawarehouseprototype_spark.streaming.pipeline import ActivePipeline
 from activedatawarehouseprototype_spark.streaming.registry import RuleRegistry
 
@@ -44,12 +50,16 @@ def _events(spark, n):
     import datetime as dt
 
     base = int(dt.datetime(2024, 1, 1).timestamp())
-    return spark.range(n).select(
+    cols = [
         "id",
         (F.col("id") % 5000).cast("int").alias("carId"),
         F.timestamp_seconds(F.lit(base) + F.col("id") / 1000.0).alias("ts"),
         (F.col("id") * 7 % 160).cast("double").alias("speed"),
-    )
+    ]
+    if RULES == "eca":
+        # the car-feed parser stamps each row with its parse time
+        cols.append(F.current_timestamp().alias("processTime"))
+    return spark.range(n).select(*cols)
 
 
 def _rules() -> list[dict]:
@@ -80,13 +90,31 @@ def _rules() -> list[dict]:
 def main():
     spark = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false"})
     jobs = JobCounter(spark, "profile-batch")
+    # side writes run their jobs in a group of their own, so they can be
+    # told apart; the batch's count is both groups together
+    side_group = f"profile-side-{uuid.uuid4().hex[:12]}"
+    submit = pipeline_mod._SideWrites.submit
+
+    def submit_in_side_group(self, fn, *args):
+        def in_group(*a):
+            spark.sparkContext.setJobGroup(side_group, "side write")
+            return fn(*a)
+
+        submit(self, in_group, *args)
+
+    pipeline_mod._SideWrites.submit = submit_in_side_group
+    tracker = spark.sparkContext.statusTracker()
 
     def counters():
-        return time.perf_counter(), jobs.count(), codegen_compiles(spark)
+        # jobs.count() flushes the listener bus, so the side group's
+        # jobs are recorded by the time it returns
+        main = jobs.count()
+        side = len(tracker.getJobIdsForGroup(side_group))
+        return time.perf_counter(), main + side, side, codegen_compiles(spark)
 
     def since(c0):
         c1 = counters()
-        return c1[0] - c0[0], c1[1] - c0[1], c1[2] - c0[2]
+        return tuple(b - a for a, b in zip(c0, c1))
 
     reg = RuleRegistry()
     for rule in _rules():
@@ -131,20 +159,24 @@ def main():
             for i, p in enumerate(parts):
                 c0 = counters()
                 pipe.process_batch(p, i)
-                dt, nj, nc = since(c0)
-                print(f"batch {i}: {dt:.3f}s {nj} jobs {nc} codegen compiles")
-            elapsed, nj, nc = since(all0)
-        print(f"TOTAL: {elapsed:.3f}s, {nj} jobs, {nc} codegen compiles, "
-              f"{N / elapsed:,.0f} events/s")
+                dt, nj, ns, nc = since(c0)
+                print(
+                    f"batch {i}: {dt:.3f}s {nj} jobs ({ns} on side threads) "
+                    f"{nc} codegen compiles"
+                )
+            elapsed, nj, ns, nc = since(all0)
+        print(f"TOTAL: {elapsed:.3f}s, {nj} jobs ({ns} on side threads), "
+              f"{nc} codegen compiles, {N / elapsed:,.0f} events/s")
         for name, recs in phases.items():
             print(
                 f"  {name}: {sum(r[0] for r in recs):.3f}s "
                 f"{sum(r[1] for r in recs)} jobs "
-                f"{sum(r[2] for r in recs)} codegen compiles "
+                f"{sum(r[3] for r in recs)} codegen compiles "
                 f"over {len(recs)} calls; last call: {recs[-1][1]} jobs "
-                f"{recs[-1][2]} compiles"
+                f"{recs[-1][3]} compiles"
             )
     finally:
+        pipeline_mod._SideWrites.submit = submit
         shutil.rmtree(work, ignore_errors=True)
 
 
